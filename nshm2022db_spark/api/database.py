@@ -4,9 +4,9 @@ directory of Parquet tables, one Spark engine for every path.
 Differences from the reference, all deliberate and documented:
   * one engine — no SQLite/DuckDB split (nshmdb.py:655 re-attaches the
     SQLite file to DuckDB for the one analytical query);
-  * `query()` runs as ONE job: membership agg + geometry via
-    collect_list(struct) — the reference issues one extra SQL round trip
-    per result rupture (N+1, nshmdb.py:663-683);
+  * `query()` hydrates every hit in one bridge scan — the reference
+    issues one extra SQL round trip per result rupture (N+1,
+    nshmdb.py:663-683);
   * `get_rupture_fault_info` filters on BOTH fault_system and nshm_id —
     the reference omits fault_system (nshmdb.py:589) and is ambiguous
     across systems since the natural key is only unique per system
@@ -16,9 +16,15 @@ Differences from the reference, all deliberate and documented:
     (nshmdb.py:414,564); projection here is a pluggable hook
     (``projection=`` callable) rather than a hard dependency.
 
-Scale: every dimension (fault, parent_fault, fault_plane) broadcasts;
-point lookups are parquet scans with pushed natural-key predicates; at
-100 TB partition the fact tables by fault_system for partition pruning.
+Scale: the three dimensions (parent_fault, fault, fault_plane) are held
+on the driver as one snapshot, keyed on a stamp of their table dirs —
+(path, size, mtime_ns) of every file, from os.walk, no Spark job. Any
+append, through this instance or another on the same path, changes the
+stamp and the next lookup reloads. Fault lookups then run no job; a
+rupture lookup is two narrow scans with pushed predicates (the natural
+key, then ``rupture_faults.rupture_id IN (...)``) and the driver labels,
+orders and projects the geometry. At 100 TB partition the fact tables
+by fault_system for partition pruning.
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ from pyspark.sql import functions as F
 
 from nshm2022db_spark import schemas
 from nshm2022db_spark.operators import dense_surrogate_keys, upsert_missing
+from nshm2022db_spark.operators.asof import nearest_ge_values
 from nshm2022db_spark.plans.advanced_query import AdvancedQueryTables, advanced_query
 
 # corner order matches the reference plane layout (schema.sql:22-31)
@@ -84,17 +91,43 @@ class Rupture:
     faults: dict[str, Fault] = field(default_factory=dict)
 
 
-def _planes_from_rows(rows) -> list[tuple[str, Plane]]:
-    out = []
-    for r in rows:
-        corners = np.array(
-            [
-                [r[f"{c}_lat"], r[f"{c}_lon"], r["top_depth" if c.startswith("top") else "bottom_depth"]]
-                for c in _CORNERS
-            ]
-        )
-        out.append((r["name"], Plane(corners)))
-    return out
+def _corners(r) -> np.ndarray:
+    """4×3 corner array of one fault_plane row."""
+    return np.array(
+        [
+            [r[f"{c}_lat"], r[f"{c}_lon"], r["top_depth" if c.startswith("top") else "bottom_depth"]]
+            for c in _CORNERS
+        ]
+    )
+
+
+def _stamp(dirs: list[str]) -> frozenset:
+    """(path, size, mtime_ns) of every file under ``dirs``; no Spark job."""
+    out = set()
+    for d in dirs:
+        for dp, _, files in os.walk(d):
+            for name in files:
+                p = os.path.join(dp, name)
+                try:
+                    st = os.stat(p)
+                except FileNotFoundError:  # moved by a concurrent writer
+                    continue
+                out.add((p, st.st_size, st.st_mtime_ns))
+    return frozenset(out)
+
+
+@dataclass
+class _Dimensions:
+    """Driver-held parent_fault, fault and fault_plane. A fault whose
+    parent row is missing is left out, as the inner joins it replaces
+    left it out."""
+
+    stamp: frozenset
+    fault_ids: dict[tuple[int, int], int]  # (fault_system, nshm_id) → fault_id
+    faults: dict  # fault_id → fault Row
+    names: dict[int, str]  # parent_id → name
+    planes: dict[int, list[tuple[int, np.ndarray]]]  # fault_id → (plane_id, corners), by plane_id
+    dim: DataFrame  # (fault_id, name): the membership DSL's dimension
 
 
 class NSHMDB:
@@ -118,6 +151,7 @@ class NSHMDB:
         # read, nshmdb.py:414,564); identity by default
         self.projection = projection
         self.partition_facts = partition_facts
+        self._dims: _Dimensions | None = None
 
     # -- lifecycle (reference: create/with-context, nshmdb.py:104-163) ------
 
@@ -441,93 +475,96 @@ class NSHMDB:
 
     # -- point lookups (reference: nshmdb.py:368-527) ------------------------
 
-    def _fault_rows(self, fault_system: int, fault_nshm_id: int):
-        fp = self.table("fault_plane").alias("fp")
-        f = self.table("fault").alias("f")
-        pf = self.table("parent_fault").alias("pf")
-        return (
-            fp.join(F.broadcast(f), F.col("fp.fault_id") == F.col("f.fault_id"))
-            .join(F.broadcast(pf), F.col("f.parent_id") == F.col("pf.parent_id"))
-            .filter(
-                (F.col("f.nshm_id") == fault_nshm_id)
-                & (F.col("f.fault_system") == fault_system)
+    def _dimensions(self) -> _Dimensions:
+        """The dimension snapshot; reloaded (three collects) only when a
+        file under the three table dirs was added, removed or rewritten.
+        The stamp is taken before the reads, so a write racing a reload
+        leaves a stale stamp and the next call reloads again."""
+        stamp = _stamp([self._table_path(t) for t in ("parent_fault", "fault", "fault_plane")])
+        if self._dims is None or self._dims.stamp != stamp:
+            names = {r.parent_id: r.name for r in self.table("parent_fault").collect()}
+            faults = {r.fault_id: r for r in self.table("fault").collect() if r.parent_id in names}
+            planes: dict[int, list[tuple[int, np.ndarray]]] = {}
+            for r in sorted(self.table("fault_plane").collect(), key=lambda r: r.plane_id):
+                planes.setdefault(r.fault_id, []).append((r.plane_id, _corners(r)))
+            fault_ids = {(r.fault_system, r.nshm_id): fid for fid, r in faults.items()}
+            dim = self.spark.createDataFrame(
+                [(fid, names[r.parent_id]) for fid, r in faults.items()], "fault_id long, name string"
             )
-            .orderBy("fp.plane_id")
-        )
+            self._dims = _Dimensions(stamp, fault_ids, faults, names, planes, dim)
+        return self._dims
+
+    def _plane(self, corners: np.ndarray) -> Plane:
+        # a copy per call: the caller owns the result, the snapshot stays
+        # intact, and the projection hook runs on every call
+        c = corners.copy()
+        return Plane(self.projection(c) if self.projection else c)
+
+    def _fault_info(self, d: _Dimensions, fault_id: int) -> FaultInfo:
+        f = d.faults[fault_id]
+        return FaultInfo(f.fault_system, f.nshm_id, d.names[f.parent_id], f.rake, f.tect_type)
 
     def get_fault(self, fault_system: int, fault_nshm_id: int) -> Fault:
-        """reference: nshmdb.py:368-415 (J1)"""
-        rows = [r.asDict() for r in self._fault_rows(fault_system, fault_nshm_id).collect()]
-        planes = [p for _, p in _planes_from_rows(rows)]
-        if self.projection:
-            planes = [Plane(self.projection(p.corners)) for p in planes]
-        return Fault(planes)
+        """reference: nshmdb.py:368-415 (J1); an unknown key gives an empty
+        Fault"""
+        d = self._dimensions()
+        fid = d.fault_ids.get((fault_system, fault_nshm_id))
+        return Fault([self._plane(c) for _, c in d.planes.get(fid, [])])
 
     def get_fault_info(self, fault_system: int, fault_nshm_id: int) -> FaultInfo:
         """reference: nshmdb.py:417-450 (J2)"""
-        f = self.table("fault").alias("f")
-        pf = self.table("parent_fault").alias("pf")
-        row = (
-            f.join(F.broadcast(pf), F.col("f.parent_id") == F.col("pf.parent_id"))
-            .filter(
-                (F.col("f.nshm_id") == fault_nshm_id)
-                & (F.col("f.fault_system") == fault_system)
-            )
-            .select("f.fault_system", "f.nshm_id", "pf.name", "f.rake", "f.tect_type")
-            .collect()
-        )
-        if not row:
+        d = self._dimensions()
+        fid = d.fault_ids.get((fault_system, fault_nshm_id))
+        if fid is None:
             raise KeyError(f"no fault ({fault_system}, {fault_nshm_id})")
-        r = row[0]
-        return FaultInfo(r.fault_system, r.nshm_id, r.name, r.rake, r.tect_type)
+        return self._fault_info(d, fid)
 
-    def _rupture_faults_bulk(self, rupture_ids: list[int]) -> dict[int, dict[str, Fault]]:
-        """Geometry for MANY ruptures in one job (replaces the reference's
-        per-rupture query loop, nshmdb.py:663-683). One join pipeline, one
-        collect; rows regrouped driver-side by (rupture, section label)."""
-        if not rupture_ids:
-            return {}
-        fp = self.table("fault_plane").alias("fp")
-        rf = self.table("rupture_faults").alias("rf")
-        f = self.table("fault").alias("f")
-        pf = self.table("parent_fault").alias("pf")
-        rows = (
-            rf.filter(F.col("rf.rupture_id").isin(rupture_ids))
-            .join(fp, F.col("fp.fault_id") == F.col("rf.fault_id"))
-            .join(F.broadcast(f), F.col("f.fault_id") == F.col("rf.fault_id"))
-            .join(F.broadcast(pf), F.col("pf.parent_id") == F.col("f.parent_id"))
-            .orderBy("rf.rupture_id", "pf.parent_id", "fp.plane_id")
-            .select(
-                F.col("rf.rupture_id").alias("rid"),
-                # reference labeling (nshmdb.py:559-563): CRUSTAL
-                # ruptures merge every section of a parent into ONE
-                # fault keyed by the bare parent name (geometries are
-                # only connected in the crustal setting); other systems
-                # keep per-section labels, and the numeric part is the
-                # SURROGATE fault_id, exactly as the reference formats
-                F.when(
-                    F.col("f.fault_system") == 3,  # FaultSystem.Crustal
-                    F.col("pf.name"),
-                )
-                .otherwise(
-                    F.concat(
-                        F.col("pf.name"), F.lit(": Section "), F.col("f.fault_id")
-                    )
-                )
-                .alias("name"),
-                *[F.col(f"fp.{c}_{ax}") for c in _CORNERS for ax in ("lat", "lon")],
-                "fp.top_depth",
-                "fp.bottom_depth",
+    def _rupture_rows(self, fault_system: int, rupture_nshm_id: int) -> list:
+        return (
+            self.table("rupture")
+            .filter(
+                (F.col("nshm_id") == rupture_nshm_id)
+                & (F.col("fault_system") == fault_system)
             )
             .collect()
         )
-        out: dict[int, dict[str, Fault]] = {rid: {} for rid in rupture_ids}
-        for row in rows:
-            d = row.asDict()
-            (name, plane), = _planes_from_rows([d])
-            if self.projection:
-                plane = Plane(self.projection(plane.corners))
-            out[d["rid"]].setdefault(name, Fault([])).planes.append(plane)
+
+    def _sections(self, d: _Dimensions, rupture_ids: list[int]) -> dict[int, list[int]]:
+        """rupture_id → fault_ids of its bridge rows that the snapshot
+        knows, as the inner joins did: one narrow scan."""
+        out: dict[int, list[int]] = {rid: [] for rid in rupture_ids}
+        if rupture_ids:
+            for r in (
+                self.table("rupture_faults")
+                .filter(F.col("rupture_id").isin(rupture_ids))
+                .select("rupture_id", "fault_id")
+                .collect()
+            ):
+                if r.fault_id in d.faults:
+                    out[r.rupture_id].append(r.fault_id)
+        return out
+
+    def _geometry(self, d: _Dimensions, fault_ids: list[int]) -> dict[str, Fault]:
+        """One rupture's planes in (parent_id, plane_id) order, grouped by
+        the reference's labels (nshmdb.py:559-563): CRUSTAL ruptures merge
+        every section of a parent into ONE fault keyed by the bare parent
+        name (geometries are only connected in the crustal setting); other
+        systems keep "<name>: Section <fault_id>" with the SURROGATE id,
+        exactly as the reference formats it."""
+        planes = sorted(
+            (
+                (d.faults[fid].parent_id, pid, fid, c)
+                for fid in fault_ids
+                for pid, c in d.planes.get(fid, [])
+            ),
+            key=lambda p: p[:2],
+        )
+        out: dict[str, Fault] = {}
+        for parent_id, _, fid, c in planes:
+            name = d.names[parent_id]
+            crustal = d.faults[fid].fault_system == schemas.FAULT_SYSTEMS["Crustal"]
+            label = name if crustal else f"{name}: Section {fid}"
+            out.setdefault(label, Fault([])).planes.append(self._plane(c))
         return out
 
     def get_rupture_faults(self, rupture_id: int) -> dict[str, Fault]:
@@ -536,18 +573,12 @@ class NSHMDB:
         parameter is the INTERNAL rupture_id — the reference's docstring
         says nshm id but it is always called with internal ids
         (nshmdb.py:499,672); here the name tells the truth."""
-        return self._rupture_faults_bulk([rupture_id]).get(rupture_id, {})
+        d = self._dimensions()
+        return self._geometry(d, self._sections(d, [rupture_id])[rupture_id])
 
     def get_rupture(self, fault_system: int, rupture_nshm_id: int) -> Rupture:
         """reference: nshmdb.py:470-500 (P2 + chained geometry fetch)"""
-        rows = (
-            self.table("rupture")
-            .filter(
-                (F.col("nshm_id") == rupture_nshm_id)
-                & (F.col("fault_system") == fault_system)
-            )
-            .collect()
-        )
+        rows = self._rupture_rows(fault_system, rupture_nshm_id)
         if not rows:
             raise KeyError(f"no rupture ({fault_system}, {rupture_nshm_id})")
         r = rows[0]
@@ -561,38 +592,27 @@ class NSHMDB:
             faults=self.get_rupture_faults(r.rupture_id),
         )
 
+    def _rupture_fault_ids(self, d: _Dimensions, fault_system: int, rupture_nshm_id: int) -> list[int]:
+        """The sections of a rupture known to the snapshot: two narrow scans."""
+        rids = [r.rupture_id for r in self._rupture_rows(fault_system, rupture_nshm_id)]
+        return [fid for fids in self._sections(d, rids).values() for fid in fids]
+
     def get_rupture_fault_info(
         self, fault_system: int, rupture_nshm_id: int
     ) -> list[FaultInfo]:
         """Fault info for every section of a rupture (reference:
-        nshmdb.py:567-621, J4). Fixed: filters on fault_system too."""
-        r = self.table("rupture").alias("r")
-        rf = self.table("rupture_faults").alias("rf")
-        f = self.table("fault").alias("f")
-        pf = self.table("parent_fault").alias("pf")
-        rows = (
-            r.filter(
-                (F.col("r.nshm_id") == rupture_nshm_id)
-                & (F.col("r.fault_system") == fault_system)
-            )
-            .join(rf, F.col("rf.rupture_id") == F.col("r.rupture_id"))
-            .join(F.broadcast(f), F.col("f.fault_id") == F.col("rf.fault_id"))
-            .join(F.broadcast(pf), F.col("pf.parent_id") == F.col("f.parent_id"))
-            .select("f.fault_system", "f.nshm_id", "pf.name", "f.rake", "f.tect_type")
-            .collect()
-        )
-        return [
-            FaultInfo(x.fault_system, x.nshm_id, x.name, x.rake, x.tect_type)
-            for x in rows
-        ]
+        nshmdb.py:567-621, J4); [] for an unknown rupture. Fixed: filters
+        on fault_system too."""
+        d = self._dimensions()
+        return [self._fault_info(d, fid) for fid in self._rupture_fault_ids(d, fault_system, rupture_nshm_id)]
 
     def get_fault_names(self) -> set[str]:
         """reference: nshmdb.py:596-607 (A9)"""
-        return {r.name for r in self.table("parent_fault").select("name").distinct().collect()}
+        return set(self._dimensions().names.values())
 
     def get_fault_ids(self) -> set[int]:
         """reference: nshmdb.py:609-621"""
-        return {r.nshm_id for r in self.table("fault").select("nshm_id").distinct().collect()}
+        return {nshm_id for _, nshm_id in self._dimensions().fault_ids}
 
     # -- rates (reference: most_likely_fault, nshmdb.py:165-248) -------------
 
@@ -607,49 +627,29 @@ class NSHMDB:
         parent-fault name. A parent with no MFD row at its rounded
         magnitude is OMITTED from the result, exactly as the
         reference's equality join drops it (rounding within each
-        parent's own set would fabricate an answer instead)."""
-        r = self.table("rupture").alias("r")
-        rf = self.table("rupture_faults").alias("rf")
-        mfd = self.table("magnitude_frequency_distribution").alias("mfd")
-        f = self.table("fault").alias("f")
-        pf = self.table("parent_fault").alias("pf")
-
-        rupture_mfd = (
-            r.filter(
-                (F.col("r.nshm_id") == rupture_nshm_id)
-                & (F.col("r.fault_system") == fault_system)
-            )
-            .join(rf, F.col("rf.rupture_id") == F.col("r.rupture_id"))
-            .join(mfd, F.col("mfd.fault_id") == F.col("rf.fault_id"))
-            .join(F.broadcast(f), F.col("f.fault_id") == F.col("rf.fault_id"))
-            .join(F.broadcast(pf), F.col("pf.parent_id") == F.col("f.parent_id"))
-            .select("pf.name", "mfd.magnitude", "mfd.rate")
-        )
-
-        targets = self.spark.createDataFrame(
-            list(magnitudes.items()), "name string, target double"
-        )
-        from nshm2022db_spark.operators import nearest_ge_lookup
-
-        # GLOBAL domain: one distinct-magnitude set across the whole
-        # rupture (the reference's single searchsorted array), shared by
-        # every requested parent
-        rounded = nearest_ge_lookup(
-            rupture_mfd.select("magnitude"), "magnitude", targets, "target"
-        )
-        named = targets.join(rounded, "target").select("name", "rounded")
-        rates = (
-            named.alias("t")
-            .join(
-                rupture_mfd.alias("m"),
-                (F.col("m.name") == F.col("t.name"))
-                & (F.col("m.magnitude") == F.col("t.rounded")),
-            )
-            .groupBy("t.name")
-            .agg(F.sum("m.rate").alias("rate"))
-            .collect()
-        )
-        return {x.name: x.rate for x in rates}
+        parent's own set would fabricate an answer instead). The
+        rupture's MFD rows (≤ sections × bins) come in one scan."""
+        d = self._dimensions()
+        fids = self._rupture_fault_ids(d, fault_system, rupture_nshm_id)
+        mfd: dict[int, list[tuple[float, float]]] = {}
+        if fids:
+            for r in (
+                self.table("magnitude_frequency_distribution")
+                .filter(F.col("fault_id").isin(fids))
+                .select("fault_id", "magnitude", "rate")
+                .collect()
+            ):
+                mfd.setdefault(r.fault_id, []).append((r.magnitude, r.rate))
+        rows = [(d.names[d.faults[fid].parent_id], m, rate) for fid in fids for m, rate in mfd.get(fid, [])]
+        if not rows:
+            return {}
+        rounded = nearest_ge_values([m for _, m, _ in rows], list(magnitudes.values()))
+        out = {}
+        for name, target in zip(magnitudes, rounded):
+            rates = [rate for n, m, rate in rows if n == name and m == target]
+            if rates:
+                out[name] = sum(rates)
+        return out
 
     # -- the advanced query (reference: nshmdb.py:623-683) -------------------
 
@@ -661,17 +661,15 @@ class NSHMDB:
         limit: int = 100,
         fault_count_limit: int | None = None,
     ) -> list[Rupture]:
-        """Membership-DSL query → hydrated Ruptures WITH geometry, one
-        Spark job + one geometry join — no per-row round trips (§3.1)."""
-        f = self.table("fault").alias("f")
-        pf = self.table("parent_fault").alias("pf")
-        dim = f.join(F.broadcast(pf), F.col("f.parent_id") == F.col("pf.parent_id")).select(
-            F.col("f.fault_id").alias("fault_id"), F.col("pf.name").alias("name")
-        )
+        """Membership-DSL query → hydrated Ruptures WITH geometry: the
+        advanced_query plan over the snapshot's (fault_id, name)
+        dimension, then one bridge scan for every hit's sections, with
+        the geometry from the snapshot — no per-row round trips (§3.1)."""
+        d = self._dimensions()
         t = AdvancedQueryTables(
             fact=self.table("rupture"),
             bridge=self.table("rupture_faults"),
-            dim=dim,
+            dim=d.dim,
             fact_key="rupture_id",
             bridge_fact_key="rupture_id",
             bridge_dim_key="fault_id",
@@ -680,18 +678,15 @@ class NSHMDB:
             rate_col="rate",
             magnitude_col="magnitude",
         )
-        hits = advanced_query(
+        rows = advanced_query(
             t,
             query_str,
             rate_bounds=rate_bounds,
             magnitude_bounds=magnitude_bounds,
             limit=limit,
             fault_count_limit=fault_count_limit,
-        )
-
-        # single geometry join for ALL hit ruptures (replaces N+1)
-        rows = hits.collect()
-        geometry = self._rupture_faults_bulk([r.rupture_id for r in rows])
+        ).collect()
+        sections = self._sections(d, [r.rupture_id for r in rows])
         return [
             Rupture(
                 r.fault_system,
@@ -700,7 +695,7 @@ class NSHMDB:
                 r.area,
                 r.len,
                 r.rate,
-                faults=geometry.get(r.rupture_id, {}),
+                faults=self._geometry(d, sections[r.rupture_id]),
             )
             for r in rows
         ]

@@ -15,10 +15,15 @@ Spark has no native as-of join; two scale regimes:
 * ``nearest_ge_lookup_per_key`` — the same semantics partitioned by a key
   (fault_id in the reference's most_likely_fault): range condition + window
   ``row_number() == 1`` per (key, target). AQE handles skew.
+
+``nearest_ge_values`` is the driver-side twin for a domain that is
+already on the driver (the few MFD rows of one rupture in
+``NSHMDB.most_likely_fault``): the reference's searchsorted itself.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -56,6 +61,15 @@ def nearest_ge_lookup(domain: DataFrame, value_col: str, targets: DataFrame, tar
             F.coalesce(F.col("__ge"), F.col("__max")).alias("rounded"),
         )
     )
+
+
+def nearest_ge_values(domain, targets) -> np.ndarray:
+    """For each target t: min distinct value of the non-empty ``domain``
+    ≥ t, clamped to its max — np.searchsorted over the sorted distinct
+    values, as nshmdb.py:215-221. Same answers as ``nearest_ge_lookup``."""
+    srt = np.unique(np.asarray(domain, dtype=float))
+    idx = np.searchsorted(srt, np.asarray(targets, dtype=float))
+    return srt[np.minimum(idx, len(srt) - 1)]
 
 
 def nearest_ge_lookup_per_key(

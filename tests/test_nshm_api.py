@@ -4,6 +4,8 @@ its golden expectations (:73-133) and the ETL pipeline round trip."""
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pytest
 
@@ -20,9 +22,7 @@ from nshm2022db_spark.etl import (
 from nshm2022db_spark import schemas
 
 
-@pytest.fixture(scope="module")
-def db(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("nshmdb"))
+def alpine_db(spark, path: str) -> NSHMDB:
     db = NSHMDB.create(spark, path)
     mk = spark.createDataFrame
     # Alpine Fault canonical fixture + a second fault/rupture for joins
@@ -59,6 +59,23 @@ def db(spark, tmp_path_factory):
         mk([(1, 1, 6.5, 0.01), (2, 1, 7.0, 0.004), (3, 2, 7.2, 0.001)], schemas.MFD),
     )
     return db
+
+
+@pytest.fixture(scope="module")
+def db(spark, tmp_path_factory):
+    return alpine_db(spark, str(tmp_path_factory.mktemp("nshmdb")))
+
+
+def count_jobs(spark, fn) -> int:
+    """Spark jobs submitted while ``fn`` runs, counted by job group."""
+    sc = spark.sparkContext
+    group = f"nshm-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group, interruptOnCancel=False)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class TestPointLookups:
@@ -434,3 +451,96 @@ class TestReferenceParityDetails:
         assert db.most_likely_fault(3, 21, {"B": 6.55}) == {"B": 0.03}
         # A at 6.3 → global 6.5 → A's 6.5 row
         assert db.most_likely_fault(3, 21, {"A": 6.3}) == {"A": 0.01}
+
+
+class TestLookupJobBudget:
+    """Spark jobs per warm call: fault lookups are answered from the
+    driver-held dimension snapshot, rupture lookups are two narrow scans
+    (natural key, then bridge), most_likely_fault adds one MFD scan."""
+
+    BUDGETS = {
+        "get_fault": (lambda db: db.get_fault(3, 1), 0),
+        "get_fault_info": (lambda db: db.get_fault_info(3, 1), 0),
+        "get_rupture": (lambda db: db.get_rupture(3, 2), 2),
+        "get_rupture_fault_info": (lambda db: db.get_rupture_fault_info(3, 2), 2),
+        "query": (lambda db: db.query("Alpine Fault"), 6),
+        "most_likely_fault": (
+            lambda db: db.most_likely_fault(3, 2, {"Alpine Fault": 6.7, "Hope Fault": 7.0}),
+            3,
+        ),
+    }
+
+    @pytest.mark.parametrize("op", sorted(BUDGETS))
+    def test_warm_call_within_budget(self, spark, db, op):
+        call, budget = self.BUDGETS[op]
+        call(db)  # warm: the snapshot load belongs to the first call
+        assert count_jobs(spark, lambda: call(db)) <= budget
+
+
+class TestDimensionSnapshot:
+    CORNERS = np.array(
+        [[-40.0, 175.0, 0.0], [-40.0, 176.0, 0.0], [-41.0, 176.0, 15.0], [-41.0, 175.0, 15.0]]
+    )
+
+    def _add(self, spark, via: NSHMDB, k: int) -> None:
+        """A new parent fault, fault, plane and rupture, natural keys 10+k."""
+        via.insert_many_faults(
+            [FaultInfo(3, 10 + k, f"Kaikoura {k}", 30.0, None, Fault([Plane(self.CORNERS + k)]))]
+        )
+        via.insert_many_ruptures(
+            spark.createDataFrame(
+                [(10 + k, 3, 6.9, 40.0, 8.0, 0.003)],
+                "nshm_id long, fault_system int, magnitude double, area double,"
+                " len double, rate double",
+            ),
+            spark.createDataFrame(
+                [(10 + k, 10 + k, 3)],
+                "rupture_nshm_id long, fault_nshm_id long, fault_system int",
+            ),
+        )
+
+    def test_appends_through_any_instance_are_seen(self, spark, tmp_path):
+        db = alpine_db(spark, str(tmp_path / "db"))
+        other = NSHMDB(spark, db.path)
+        assert len(db.get_fault(3, 1).planes) == 1  # warm snapshot
+        for k, via in enumerate((db, other)):
+            self._add(spark, via, k)
+            name = f"Kaikoura {k}"
+            (plane,) = db.get_fault(3, 10 + k).planes
+            np.testing.assert_allclose(plane.corners, self.CORNERS + k)
+            assert db.get_fault_info(3, 10 + k).name == name
+            assert list(db.get_rupture(3, 10 + k).faults) == [name]
+            assert name in db.get_fault_names()
+        assert db.get_fault_names() == {"Alpine Fault", "Hope Fault", "Kaikoura 0", "Kaikoura 1"}
+
+    def test_projection_is_applied_per_call(self, spark, db):
+        plain = NSHMDB(spark, db.path)
+        shifted = NSHMDB(spark, db.path, projection=lambda c: c + 1.0)
+        for _ in range(2):  # the second call reads a warm snapshot
+            np.testing.assert_allclose(
+                shifted.get_fault(3, 1).corners, plain.get_fault(3, 1).corners + 1.0
+            )
+            np.testing.assert_allclose(
+                shifted.get_rupture(3, 1).faults["Alpine Fault"].corners,
+                plain.get_rupture(3, 1).faults["Alpine Fault"].corners + 1.0,
+            )
+        # a caller mutating its result does not reach the snapshot
+        plain.get_fault(3, 1).planes[0].corners[:] = 0.0
+        assert plain.get_fault(3, 1).corners[0, 0] == -42.0
+
+
+class TestMissingKeys:
+    def test_each_lookup_on_a_missing_key(self, db):
+        assert db.get_fault(3, 999).planes == []
+        assert db.get_fault(1, 1).planes == []  # right id, wrong system
+        with pytest.raises(KeyError):
+            db.get_fault_info(3, 999)
+        with pytest.raises(KeyError):
+            db.get_rupture(3, 999)
+        assert db.get_rupture_fault_info(3, 999) == []
+        assert db.most_likely_fault(3, 999, {"Alpine Fault": 6.5}) == {}
+
+    def test_most_likely_fault_omits_names_outside_the_rupture(self, db):
+        # Hope Fault has MFD rows but is not a section of rupture 1
+        got = db.most_likely_fault(3, 1, {"Alpine Fault": 6.5, "Hope Fault": 7.2, "Nowhere": 7.0})
+        assert got == {"Alpine Fault": 0.01}

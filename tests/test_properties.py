@@ -8,7 +8,9 @@ Two laws pinned over randomized inputs:
   membership assignments.
 * nearest-≥ semantics: the distributed asof operator agrees with the
   reference's np.searchsorted formulation (nshmdb.py:215-221) on random
-  domains and targets, including the clamp-to-max edge.
+  domains and targets, including the clamp-to-max edge; and the
+  driver-side rounding of NSHMDB.most_likely_fault agrees with it on
+  random magnitude domains.
 """
 
 from __future__ import annotations
@@ -107,6 +109,37 @@ class TestAsofProperty:
         for t in np.unique(targets_vals):
             idx = min(int(np.searchsorted(srt, t)), len(srt) - 1)
             assert got[float(t)] == float(srt[idx]), t
+
+
+class TestDriverRoundingProperty:
+    @settings(max_examples=20, deadline=None)
+    @given(
+        st.lists(st.floats(5.0, 9.5).map(lambda m: round(m, 2)), min_size=1, max_size=40),
+        st.lists(st.floats(4.0, 10.5).map(lambda m: round(m, 3)), max_size=8),
+        st.data(),
+    )
+    def test_most_likely_fault_rounding_matches_nearest_ge_lookup(
+        self, spark, domain, others, data
+    ):
+        """most_likely_fault rounds on the driver (nearest_ge_values over
+        the rupture's MFD magnitudes); it must give what the distributed
+        nearest_ge_lookup gives, below the minimum, above the maximum
+        (the clamp) and exactly on a bin."""
+        from nshm2022db_spark.operators.asof import nearest_ge_lookup, nearest_ge_values
+
+        on_bin = data.draw(st.sampled_from(domain))
+        targets = sorted({min(domain) - 0.5, max(domain) + 0.5, on_bin, *others})
+        got = dict(zip(targets, nearest_ge_values(domain, targets)))
+        want = {
+            r.t: r.rounded
+            for r in nearest_ge_lookup(
+                spark.createDataFrame([(m,) for m in domain], "v double"),
+                "v",
+                spark.createDataFrame([(t,) for t in targets], "t double"),
+                "t",
+            ).collect()
+        }
+        assert got == want
 
 
 class TestPortableRandomized:
