@@ -723,6 +723,61 @@ def _note_dir_schemas(
         manifest["dir_schemas"] = out
 
 
+def _next_manifest(
+    cur: dict,
+    op: str,
+    pcol: str,
+    stage: str,
+    parts: dict,
+    stats: dict | None = None,
+    bloom: dict | None = None,
+    batch_id: int | None = None,
+    schemas: dict | None = None,
+    **changes,
+) -> dict:
+    """The manifest that follows ``cur`` on a partition-mapped table —
+    the one place the parent-carry rule lives. A commit that does not
+    deliberately change them keeps its parent's CHECK constraints,
+    legacy layouts, column mapping (else a compaction or append would
+    silently un-rename the table) and tombstones (``dv``/``dv_key``:
+    rewrites re-materialize rows unfiltered, reads keep anti-joining
+    the carried keys). ``stats``/``bloom`` are the writer's own
+    bookkeeping, recorded when non-empty. ``changes`` are the keys the
+    commit does change: a value replaces the carried one, None removes
+    it. ``dir_schemas`` is noted last (`_note_dir_schemas`), against
+    the final set of referenced dirs, with ``schemas`` for the new
+    stages."""
+    manifest = {
+        "version": cur["version"] + 1,
+        "dir": stage,
+        "partition_col": pcol,
+        "partitions": parts,
+        "batch_ids": [batch_id] if batch_id is not None else [],
+        "op": op,
+    }
+    if stats:
+        manifest["stats"] = stats
+    if bloom:
+        manifest["bloom"] = bloom
+    if cur.get("constraints"):
+        manifest["constraints"] = cur["constraints"]
+    if cur.get("legacy_layouts"):
+        manifest["legacy_layouts"] = cur["legacy_layouts"]
+    for k in _SCHEMA_MAP_KEYS:
+        if cur.get(k):
+            manifest[k] = cur[k]
+    if cur.get("dv"):
+        manifest["dv"] = cur["dv"]
+        manifest["dv_key"] = cur["dv_key"]
+    for k, v in changes.items():
+        if v is None:
+            manifest.pop(k, None)
+        else:
+            manifest[k] = v
+    _note_dir_schemas(manifest, cur, schemas)
+    return manifest
+
+
 def _distribute_for_partitioned_write(
     df: DataFrame, pcol: str, nvals: int | None = None
 ) -> DataFrame:
@@ -1074,6 +1129,19 @@ def _bloom_prune(
     return out
 
 
+def _pruned_entries(
+    spark: SparkSession, manifest: dict, prune: dict | None
+) -> dict:
+    """The partition-map entries a ``prune`` spec (`read_keyed_table`'s)
+    cannot disprove: ranges and null tests through the manifest stats,
+    ``("eq", v)`` probes through the stats AND the Bloom bitmaps."""
+    base_prune, eq = _split_prune(prune)
+    parts = _stats_prune(manifest, base_prune)
+    if eq and parts:
+        parts = _bloom_prune(spark, manifest, parts, eq)
+    return parts
+
+
 def committed_partition_transaction(
     spark: SparkSession,
     table_dir: str,
@@ -1242,45 +1310,23 @@ def committed_partition_transaction(
                     ),
                 )
             )
-        manifest = {
-            "version": cur["version"] + 1,
-            "dir": stage,
-            "partition_col": partition_col,
-            "partitions": new_parts,
-            "batch_ids": [],
-            "op": "rewrite",
-        }
-        if not data_change:
-            # Delta's dataChange=false: the rewrite provably RESTATES
-            # rows (compaction, Z-order, tombstone materialization) —
-            # change feeds skip the commit entirely instead of emitting
-            # no-op pairs, and additive consumers stay sound across it
-            manifest["data_change"] = False
-        if new_stats:
-            manifest["stats"] = new_stats
-        if new_bloom:
-            manifest["bloom"] = new_bloom
-        if cur.get("constraints"):
-            manifest["constraints"] = cur["constraints"]
-        if cur.get("legacy_layouts"):
-            manifest["legacy_layouts"] = cur["legacy_layouts"]
-        if not _drop_map:
-            _carry_column_map(manifest, cur)
-        if cur.get("dv") and not _drop_dv:
-            # tombstones survive rewrites: the rewritten partitions
-            # re-materialize their rows unfiltered, but reads keep
-            # anti-joining the carried keys (materialize_tombstones is
-            # the one transaction that clears them)
-            manifest["dv"] = cur["dv"]
-            manifest["dv_key"] = cur["dv_key"]
-        _note_dir_schemas(
-            manifest,
-            cur,
-            {
+        manifest = _next_manifest(
+            cur, "rewrite", partition_col, stage, new_parts, new_stats,
+            new_bloom,
+            schemas={
                 stage: _file_schema_json(out.schema, drop=partition_col)
                 if written
                 else None
             },
+            # Delta's dataChange=false: the rewrite provably RESTATES
+            # rows (compaction, Z-order, tombstone materialization) —
+            # change feeds skip the commit entirely instead of emitting
+            # no-op pairs, and additive consumers stay sound across it
+            data_change=None if data_change else False,
+            # materialize_tombstones / materialize_column_mapping are
+            # the transactions that clear the tombstones / the map
+            **(dict.fromkeys(("dv", "dv_key")) if _drop_dv else {}),
+            **(dict.fromkeys(_SCHEMA_MAP_KEYS) if _drop_map else {}),
         )
         if _publish(table_dir, manifest, stage_path):
             return
@@ -1772,28 +1818,10 @@ def append_partition_transaction(
                         new_bloom[e] = merged_b
                     else:
                         new_bloom.pop(e, None)
-            manifest = {
-                "version": cur["version"] + 1,
-                "dir": stage,
-                "partition_col": partition_col,
-                "partitions": new_parts,
-                "batch_ids": [batch_id] if batch_id is not None else [],
-                "op": "append",
-            }
-            if new_stats:
-                manifest["stats"] = new_stats
-            if new_bloom:
-                manifest["bloom"] = new_bloom
-            if cur.get("constraints"):
-                manifest["constraints"] = cur["constraints"]
-            if cur.get("legacy_layouts"):
-                manifest["legacy_layouts"] = cur["legacy_layouts"]
-            _carry_column_map(manifest, cur)
-            if cur.get("dv"):
-                manifest["dv"] = cur["dv"]
-                manifest["dv_key"] = cur["dv_key"]
-            _note_dir_schemas(
-                manifest, cur, {stage: stage_schema if written else None}
+            manifest = _next_manifest(
+                cur, "append", partition_col, stage, new_parts, new_stats,
+                new_bloom, batch_id,
+                schemas={stage: stage_schema if written else None},
             )
             if _publish(
                 table_dir, manifest, stage_path, keep_stage_on_conflict=True
@@ -2090,26 +2118,10 @@ def overwrite_partition_transaction(
             }
             if bloom_cols:
                 new_bloom.update(staged_blooms)
-            manifest = {
-                "version": cur["version"] + 1,
-                "dir": stage,
-                "partition_col": partition_col,
-                "partitions": new_parts,
-                "batch_ids": [batch_id] if batch_id is not None else [],
-                "op": "overwrite",
-            }
-            if new_stats:
-                manifest["stats"] = new_stats
-            if new_bloom:
-                manifest["bloom"] = new_bloom
-            if cur.get("constraints"):
-                manifest["constraints"] = cur["constraints"]
-            _carry_column_map(manifest, cur)
-            if cur.get("dv"):
-                manifest["dv"] = cur["dv"]
-                manifest["dv_key"] = cur["dv_key"]
-            _note_dir_schemas(
-                manifest, cur, {stage: stage_schema if written else None}
+            manifest = _next_manifest(
+                cur, "overwrite", partition_col, stage, new_parts, new_stats,
+                new_bloom, batch_id,
+                schemas={stage: stage_schema if written else None},
             )
             if _publish(
                 table_dir, manifest, stage_path, keep_stage_on_conflict=True
@@ -2474,16 +2486,6 @@ def _is_materialize(by_v: dict, m: dict) -> bool:
     return _map_meta(m) != _map_meta(prev)
 
 
-def _carry_column_map(manifest: dict, cur: dict) -> None:
-    """Carry the column-mapping metadata (logical→physical rename map +
-    dropped physical names) forward onto a new manifest — every commit
-    that doesn't deliberately change the mapping must preserve it, or a
-    compaction/append would silently un-rename the table."""
-    for k in _SCHEMA_MAP_KEYS:
-        if cur.get(k):
-            manifest[k] = cur[k]
-
-
 def _check_map_stable(
     by_v: dict, m: dict, table_dir: str, from_version: int
 ) -> None:
@@ -2613,14 +2615,13 @@ def _carry_stats_blooms(
     stage_path: str,
     stats_cols: list[str] | None,
 ) -> tuple[dict, dict]:
-    """Stats/bloom bookkeeping shared by the DML writers (MERGE and
-    UPDATE — r11 review #3 extracted it so the invariant cannot
-    diverge): carried entries keep theirs; rewritten entries recompute
-    stats from the staged footers and drop blooms; an entry that
-    EXTENDED an existing mapping drops both (they no longer cover the
-    new generation — stat-/bloom-less is never pruned, so safe;
-    compaction re-establishes them); a brand-NEW entry's stage IS its
-    full content, so it records stats."""
+    """Stats/bloom bookkeeping of the DML core (`_dml_commit`): carried
+    entries keep theirs; rewritten entries recompute stats from the
+    staged footers and drop blooms; an entry that EXTENDED an existing
+    mapping drops both (they no longer cover the new generation —
+    stat-/bloom-less is never pruned, so safe; compaction
+    re-establishes them); a brand-NEW entry's stage IS its full
+    content, so it records stats."""
     new_stats = {
         e: st
         for e, st in cur.get("stats", {}).items()
@@ -2646,7 +2647,7 @@ def _carry_stats_blooms(
 
 
 def _cdc_image_parts(tcols: list[str], ttypes: dict, have: set):
-    """(pre_fields, cur_fields, img) for the DML writers' CDC sidecar:
+    """(pre_fields, cur_fields, img) for the DML core's CDC sidecar:
     pre-images read the ``_pre`` struct (evolved columns pad NULL),
     post-images read the decision frame's final values, ``img`` wraps
     either with its ``_change_type`` tag."""
@@ -2768,24 +2769,11 @@ def evolve_partition_column(
         legacy.append(old)
         stage = f"data-{uuid.uuid4().hex}"
         os.makedirs(os.path.join(table_dir, stage), exist_ok=True)
-        manifest = {
-            "version": cur["version"] + 1,
-            "dir": stage,
-            "partition_col": new_partition_col,
-            "partitions": {},
-            "legacy_layouts": legacy,
-            "batch_ids": [],
-            "op": "evolve",
-        }
-        if cur.get("constraints"):
-            manifest["constraints"] = cur["constraints"]
-        _carry_column_map(manifest, cur)
-        if cur.get("dv"):
-            # outstanding tombstones survive the spec change — dropping
-            # them here would resurrect deleted rows on the next read
-            manifest["dv"] = cur["dv"]
-            manifest["dv_key"] = cur["dv_key"]
-        _note_dir_schemas(manifest, cur)
+        # outstanding tombstones survive the spec change (they carry):
+        # dropping them here would resurrect deleted rows on the next read
+        manifest = _next_manifest(
+            cur, "evolve", new_partition_col, stage, {}, legacy_layouts=legacy
+        )
         if _publish(table_dir, manifest, os.path.join(table_dir, stage)):
             return manifest["version"]
     raise RuntimeError(f"commit conflict persisted on {table_dir}")
@@ -3068,30 +3056,14 @@ def migrate_legacy_layouts(
                     new_stats[e] = add
                 else:
                     new_stats.pop(e, None)  # conservative: re-scan later
-        manifest = {
-            "version": cur["version"] + 1,
-            "dir": stage,
-            "partition_col": pcol,
-            "partitions": new_parts,
-            "batch_ids": [],
-            "op": "migrate",
-        }
-        if new_stats:
-            manifest["stats"] = new_stats
-        if cur.get("constraints"):
-            manifest["constraints"] = cur["constraints"]
-        _carry_column_map(manifest, cur)
-        if cur.get("dv"):
-            manifest["dv"] = cur["dv"]
-            manifest["dv_key"] = cur["dv_key"]
-        _note_dir_schemas(
-            manifest,
-            cur,
-            {
+        manifest = _next_manifest(
+            cur, "migrate", pcol, stage, new_parts, new_stats,
+            schemas={
                 stage: _file_schema_json(old_rows.schema, drop=pcol)
                 if old_rows is not None and written
                 else None
             },
+            legacy_layouts=None,  # folded in: the whole point
         )
         if _publish(table_dir, manifest, os.path.join(table_dir, stage)):
             return manifest["version"]
@@ -4157,10 +4129,7 @@ def _read_partition_map(
     column is normalized to STRING on every branch — dir-name inference
     would otherwise type `day=2024-01-01` as a date in one generation
     and the lit() branch as a string."""
-    base_prune, eq = _split_prune(prune)
-    parts = _stats_prune(manifest, base_prune)
-    if eq and parts:
-        parts = _bloom_prune(spark, manifest, parts, eq)
+    parts = _pruned_entries(spark, manifest, prune)
     if not parts:
         if not manifest["partitions"]:
             return None  # genuinely empty table
@@ -4428,19 +4397,531 @@ def _materialize_decision(dec: DataFrame) -> DataFrame:
     blocks, the plan never re-runs, so even a nondeterministic caller
     SET/condition expression cannot diverge between consumers within an
     attempt — but without the tiny-write job-scheduling floor (~0.4 s
-    per write at ANY size locally, PERF.md r14; measured 2.7× on the
+    per write at ANY size locally, see PERF.md; measured 2.7× on the
     materialize+consume cycle). Storage is MEMORY_AND_DISK on the
     executors: memory pressure SPILLS, never recomputes; an executor
     loss fails the job (lineage is truncated) and the commit retries
     from the CAS base — fail-stop, the right failure mode for commit
     machinery, vs. the silent recompute a plain persist() would risk.
     A SIGKILLed writer also no longer leaks a full-row scratch dir
-    inside the table dir (the r12 GDPR sweep concern — block-manager
+    inside the table dir (an erasure concern — block-manager
     state dies with the JVM); vacuum keeps reaping legacy scratch-*
     leftovers from older writers.
 
-    Callers release the blocks with .unpersist() in their finally."""
+    `_dml_commit` releases the blocks with .unpersist() in its finally."""
     return dec.localCheckpoint(eager=True)
+
+
+def _dml_commit(
+    spark: SparkSession,
+    table_dir: str,
+    op: str,
+    scan,
+    build,
+    keys: list[str] | None = None,
+    stats_cols: list[str] | None = None,
+    batch_id: int | None = None,
+    max_retries: int = 10,
+    change_data: bool = True,
+) -> dict:
+    """The one commit path of MERGE, UPDATE and DELETE. Each writer
+    supplies two callbacks and this core does everything else, inside
+    one optimistic retry loop (the DML re-runs on CAS conflict: its
+    output depends on the base, so its stage cannot rebase; disjoint
+    concurrent appends rebase over the published commit instead, see
+    `_rebase_conflict`).
+
+    * ``scan(cur) -> {entry: dirs}`` — the writer's own checks against
+      the head manifest and the entries the decision must read (source
+      bounds and bloom probes for MERGE, ``prune``/``partition_values``
+      for UPDATE/DELETE). An empty scan set with no ``keys`` is a no-op
+      answered from the manifest alone, before the full-schema resolve.
+    * ``build(cur, base, tcols, ttypes) -> dec`` — the decision frame
+      over ``base``: the scanned entries read through the tombstones
+      and lifted to the LOGICAL columns ``tcols`` (typed NULLs for
+      columns the pruned scan lacks; None when nothing is scanned).
+
+    The decision frame holds the target's logical columns (partition
+    column as string) plus ``_action`` ∈ {carry, update, delete,
+    insert}, ``_t_part`` (the row's old partition value as a string)
+    and ``_pre`` (the pre-image struct on update rows, NULL elsewhere).
+    It is materialized once and one per-partition rollup decides:
+
+    * partitions with in-place updates, departures, or arrivals into
+      scanned partitions REWRITE (every surviving row restages);
+    * inserts and arrivals into UNSCANNED partitions EXTEND their
+      entry with a new generation holding just those rows (Delta's
+      pure-insert append), so carried rows are never restaged;
+    * deletes: with merge ``keys``, a partition whose only change is
+      whole-key deletes is TOMBSTONED (deletion vector, O(deleted
+      keys)); NULL-key and row-divergent deletes, and partitions that
+      may hold stale rows of a key an insert brings back, rewrite.
+      With no keys every partition holding a deleted row rewrites
+      (copy-on-write); a partition left empty leaves the map;
+    * everything else carries forward byte-identical, stats and blooms
+      included.
+
+    CHECK constraints are enforced only when the stage holds updated or
+    inserted rows: deletes restage a subset of committed rows, and
+    row-level CHECKs are closed under subset. The ``cdc-*`` sidecar
+    records the exact images (update pre/post pairs, deletes, inserts)
+    in PHYSICAL names; staged files and dv key files use physical names
+    too. Returns ``{"version", "updated", "deleted", "inserted",
+    "carried"}`` plus ``"replayed"`` for an already-committed
+    ``batch_id``."""
+    keys = keys or []
+    noop = {"updated": 0, "deleted": 0, "inserted": 0, "carried": 0}
+    for _ in range(max_retries):
+        cur = current_commit(table_dir)
+        if cur["version"] == 0 or "partitions" not in cur:
+            if op != "merge":
+                raise ValueError(
+                    f"{table_dir} is not a partition-mapped committed table"
+                )
+            raise ValueError(
+                f"{table_dir} has no commits; a merge into an empty table "
+                "is an append — use append_partition_transaction"
+                if cur["version"] == 0
+                else f"{table_dir} is a single-dir committed table; use "
+                "merge_into + committed_transaction"
+            )
+        if cur.get("legacy_layouts"):
+            article = "an" if op == "update" else "a"
+            raise ValueError(
+                f"{table_dir} has unmigrated legacy partition layouts; "
+                f"{article} {op} computed against the current layout would "
+                "miss their rows — run migrate_legacy_layouts first"
+            )
+        if batch_id is not None and batch_id in committed_batch_ids(table_dir):
+            return {"version": cur["version"], **noop, "replayed": True}
+        scan_parts = dict(scan(cur))
+        if not scan_parts and not keys:
+            return {"version": cur["version"], **noop}
+        scanned_vals = {e.split("=", 1)[1] for e in scan_parts}
+        pcol = cur["partition_col"]
+        prefix = f"{pcol}="
+        cmap = _column_map(cur)
+        pkeys = _physical_names(keys, cur)
+
+        # full-table LOGICAL schema (plan resolve, zero jobs) so a pruned
+        # base missing evolved columns still projects them as typed NULLs
+        full = _to_logical(_read_partition_map(spark, table_dir, cur), cur)
+        tcols = list(full.columns)
+        ttypes = dict(zip(full.schema.names, [f.dataType for f in full.schema]))
+        base = None
+        if scan_parts:
+            # the tombstone anti-join runs on the PHYSICAL read (dv key
+            # files carry physical names), then the base lifts to the
+            # logical view once
+            base = _apply_tombstones(
+                spark, table_dir, cur,
+                _read_partition_map(
+                    spark, table_dir,
+                    {
+                        "partition_col": pcol,
+                        "partitions": scan_parts,
+                        "dir_schemas": cur.get("dir_schemas") or {},
+                    },
+                ),
+            )
+        if base is not None:
+            have = set(base.columns)
+            base = base.select(
+                *[
+                    (
+                        F.col(cmap.get(c, c))
+                        if cmap.get(c, c) in have
+                        else F.lit(None)
+                    ).cast(ttypes[c]).alias(c)
+                    for c in tcols
+                ]
+            )
+        elif not keys:
+            return {"version": cur["version"], **noop}
+        dec = build(cur, base, tcols, ttypes)
+        # the builder may widen the schema (MERGE's evolve_schema)
+        tcols = [c for c in dec.columns if c not in ("_action", "_t_part", "_pre")]
+        ttypes = {f.name: f.dataType for f in dec.schema}
+
+        stage = f"data-{uuid.uuid4().hex}"
+        stage_path = os.path.join(table_dir, stage)
+        dv_stage = None
+        cdc_stage = None
+        try:
+            dec = _materialize_decision(dec)
+
+            # per-partition action rollup — bounded by the partition
+            # domain (the repo's sanctioned bounded-collect shape)
+            null_key = F.lit(False)
+            for k in keys:
+                null_key = null_key | F.col(k).isNull()
+            rollup = (
+                dec.groupBy(
+                    "_action", "_t_part", F.col(pcol).alias("_p"),
+                    null_key.alias("_kn"),
+                )
+                .count()
+                .collect()
+            )
+            upd_in, ins_in, del_in, moved_out = set(), set(), set(), set()
+            null_del = set()  # partitions with NULL-key delete rows
+            n_upd = n_del = n_ins = n_carry = 0
+            for r in rollup:
+                if r._action == "carry":
+                    n_carry += r["count"]
+                elif r._action == "update":
+                    n_upd += r["count"]
+                    upd_in.add(r._p)
+                    if r._p != r._t_part:
+                        moved_out.add(r._t_part)
+                elif r._action == "delete":
+                    n_del += r["count"]
+                    del_in.add(r._t_part)
+                    if r._kn:
+                        # a NULL merge key cannot be expressed as a key
+                        # tombstone: the read-side anti-join on NULL
+                        # matches nothing, so the "deleted" row would
+                        # silently survive (and poison the dv key files
+                        # for the typed stream reader) — force the
+                        # partition to rewrite instead
+                        null_del.add(r._t_part)
+                else:
+                    n_ins += r["count"]
+                    ins_in.add(r._p)
+            # Inserts do NOT force a rewrite by themselves (Delta appends
+            # new files for pure inserts): a scanned partition whose only
+            # change is arrivals of NEW keys takes a generation append
+            # below (extend_vals), O(new rows) instead of O(partition).
+            rewrite_vals = {v for v in upd_in if v in scanned_vals} | moved_out
+            if not keys:
+                # no key to tombstone: every partition holding a deleted
+                # row rewrites (copy-on-write)
+                rewrite_vals |= del_in
+            if cur.get("dv") and n_ins:
+                # re-inserting a tombstoned key clears it from the DV
+                # (consolidation below) — which would RESURRECT the
+                # key's stale physical rows in their old partitions.
+                # Those partitions must be rewritten (purged) in this
+                # same commit: their staged content is the tombstone-
+                # filtered base read, so the stale rows drop out. They
+                # are necessarily in the scan set (a re-inserted key is
+                # a source key, and pruning kept every partition whose
+                # stats can hold one); one extra bounds job, only on
+                # the dv-and-inserts path.
+                reins = (
+                    dec.filter(F.col("_action") == "insert")
+                    .select(*keys)
+                    .join(
+                        _read_parquet_fast(
+                            spark,
+                            *[
+                                os.path.join(table_dir, d)
+                                for d in cur["dv"]
+                            ],
+                            schema_json=_dirs_schema(cur, cur["dv"]),
+                        )
+                        # dv files carry PHYSICAL key names; the
+                        # decision frame is logical
+                        .select(
+                            *[
+                                F.col(pk).alias(k)
+                                for k, pk in zip(keys, pkeys)
+                            ]
+                        )
+                        .distinct(),
+                        on=keys,
+                        how="left_semi",
+                    )
+                )
+                rb = reins.agg(
+                    *[F.min(k).alias(f"_lo{i}") for i, k in enumerate(keys)],
+                    *[F.max(k).alias(f"_hi{i}") for i, k in enumerate(keys)],
+                ).collect()[0]
+                if rb["_lo0"] is not None:
+                    stale = _stats_prune(
+                        {
+                            "partitions": dict(scan_parts),
+                            "stats": cur.get("stats", {}),
+                        },
+                        {
+                            pkeys[i]: (rb[f"_lo{i}"], rb[f"_hi{i}"])
+                            for i in range(len(keys))
+                        },
+                    )
+                    rewrite_vals |= {
+                        e.split("=", 1)[1] for e in stale
+                    }
+            rewrite_vals |= null_del & del_in
+            cand = del_in - rewrite_vals
+            if cand:
+                # the DV path is sound only for WHOLE-KEY deletes: a key
+                # with duplicate target rows and a row-divergent delete
+                # condition (one row deletes here, another carries or
+                # updates elsewhere) must NOT be tombstoned — the
+                # key-wide tombstone would hide the surviving row
+                # everywhere. One bounded aggregation over the decision
+                # frame (guarded: only merges with tombstone-candidate
+                # partitions pay it); the output is the mixed keys'
+                # delete partitions — partition-domain bounded, the
+                # sanctioned collect shape.
+                keyed_rows = F.lit(True)
+                for k in keys:
+                    keyed_rows = keyed_rows & F.col(k).isNotNull()
+                mixed = (
+                    dec.filter((F.col("_action") != "insert") & keyed_rows)
+                    .groupBy(*keys)
+                    .agg(
+                        F.collect_set(
+                            F.when(
+                                F.col("_action") == "delete",
+                                F.col("_t_part"),
+                            )
+                        ).alias("_dp"),
+                        F.max(
+                            (F.col("_action") != "delete").cast("int")
+                        ).alias("_live"),
+                    )
+                    .filter((F.size("_dp") > 0) & (F.col("_live") == 1))
+                    .select(F.explode("_dp").alias("_p"))
+                    .distinct()
+                    .collect()
+                )
+                rewrite_vals |= {r._p for r in mixed} & cand
+            # extend = generation append: unscanned arrival partitions
+            # (whole partition absent from the base read) AND scanned
+            # insert-only partitions (their carried rows stay in the old
+            # generations; only the _action == "insert" rows are staged)
+            extend_vals = (upd_in | ins_in) - scanned_vals - rewrite_vals
+            extend_vals |= (ins_in & scanned_vals) - rewrite_vals
+            tomb_vals = del_in - rewrite_vals  # delete-only: DV, not rewrite
+            write_vals = sorted(rewrite_vals | extend_vals)
+            if not write_vals and not tomb_vals:
+                # nothing changed (every row carried): Delta skips
+                # empty commits; so do we
+                if n_upd or n_del or n_ins:
+                    raise AssertionError("actions counted but nothing staged")
+                return {"version": cur["version"], **noop, "carried": n_carry}
+
+            written: set[str] = set()
+            if write_vals:
+                # per-partition staging mode: rewrites stage every
+                # surviving row; extended entries stage ONLY the rows
+                # this commit created there (inserts, moved-in updates)
+                # — their carried rows live on in the prior generations.
+                # The value sets are driver-known literals, so they fold
+                # into the plan as isin predicates (no tiny
+                # createDataFrame + broadcast join job).
+                _rw = (
+                    F.col(pcol).isin(sorted(rewrite_vals))
+                    if rewrite_vals
+                    else F.lit(False)
+                )
+                stage_rows = (
+                    dec.filter(F.col("_action") != "delete")
+                    .filter(F.col(pcol).isin(write_vals))
+                    .filter(
+                        _rw
+                        | F.col("_action").isin("insert", "update")
+                    )
+                    .drop("_action", "_t_part", "_pre")
+                    # back to the stable PHYSICAL names for the staged
+                    # files (evolved source-only columns map to
+                    # themselves)
+                    .select(
+                        *[F.col(c).alias(cmap.get(c, c)) for c in tcols]
+                    )
+                )
+                _distribute_for_partitioned_write(
+                    stage_rows, pcol, nvals=len(write_vals)
+                ).write.mode("overwrite").partitionBy(pcol).parquet(
+                    stage_path
+                )
+                written = {
+                    n for n in os.listdir(stage_path) if n.startswith(prefix)
+                }
+                _check_entry_values(written)
+                if cur.get("constraints") and written and (n_upd or n_ins):
+                    _enforce_constraints(
+                        _read_partition_map(
+                            spark, table_dir,
+                            {
+                                "partition_col": pcol,
+                                "partitions": {
+                                    e: stage for e in sorted(written)
+                                },
+                                "dir_schemas": {
+                                    stage: _file_schema_json(
+                                        stage_rows.schema, drop=pcol
+                                    )
+                                },
+                            },
+                        ),
+                        cur["constraints"],
+                        stage_path,
+                        manifest=cur,
+                    )
+
+            # ---- deletion-vector bookkeeping ----
+            new_dv = cur.get("dv", [])
+            dv_key = cur.get("dv_key")
+            if tomb_vals or (new_dv and n_ins):
+                # dv files carry the PHYSICAL key names (the whole
+                # read/typed-feed side addresses them that way); the
+                # consolidation joins run in logical names and the
+                # final write aliases back
+                dv_key = _dv_key_field(pkeys)
+                tomb_df = None
+                if tomb_vals:
+                    tomb_df = (
+                        dec.filter(F.col("_action") == "delete")
+                        .filter(F.col("_t_part").isin(sorted(tomb_vals)))
+                        .select(*keys)
+                    )
+                if new_dv and n_ins:
+                    # consolidate: re-inserted keys must leave the DV or
+                    # the old tombstone hides the new row
+                    old_keys = (
+                        _read_parquet_fast(
+                            spark,
+                            *[os.path.join(table_dir, d) for d in new_dv],
+                        )
+                        .select(
+                            *[
+                                F.col(pk).alias(k)
+                                for k, pk in zip(keys, pkeys)
+                            ]
+                        )
+                        .distinct()
+                    )
+                    ins_keys = (
+                        dec.filter(F.col("_action") == "insert")
+                        .select(*keys)
+                        .distinct()
+                    )
+                    kept = old_keys.join(ins_keys, on=keys, how="left_anti")
+                    tomb_df = (
+                        kept
+                        if tomb_df is None
+                        else kept.unionByName(tomb_df)
+                    )
+                    new_dv = []
+                dv_stage = f"data-{uuid.uuid4().hex}"
+                dvf = tomb_df.distinct().select(
+                    *[F.col(k).alias(pk) for k, pk in zip(keys, pkeys)]
+                )
+                dvf.write.mode("overwrite").parquet(
+                    os.path.join(table_dir, dv_stage)
+                )
+                new_dv = new_dv + [dv_stage]
+
+            # ---- CDC sidecar (Delta's _change_data files) ----
+            # The decision frame knows every row-level action, so the
+            # commit records its EXACT images: update rows as
+            # update_preimage/update_postimage PAIRS (same dec row),
+            # deletes as their before image, inserts as their after
+            # image, carried rows absent (Delta's dataChange
+            # discipline). The typed change feed (batch and stream)
+            # then reads this O(changed rows) dir instead of
+            # reconstructing pair images from map diffs;
+            # `change_data=False` skips it and consumers fall back to
+            # the pair reconstruction.
+            if change_data:
+                pre_fields, cur_fields, _img = _cdc_image_parts(
+                    tcols, ttypes, set(dec.schema["_pre"].dataType.names)
+                )
+                # only the actions this commit holds: the images' column
+                # nullability is the union over the branches, so a
+                # DELETE keeps its base columns' own nullability
+                images = None
+                for action, n, imgs in (
+                    ("update", n_upd, [
+                        _img(pre_fields, "update_preimage"),
+                        _img(cur_fields, "update_postimage"),
+                    ]),
+                    ("delete", n_del, [_img(cur_fields, "delete")]),
+                    ("insert", n_ins, [_img(cur_fields, "insert")]),
+                ):
+                    if n:
+                        is_action = F.col("_action") == action
+                        images = (
+                            F.when(is_action, F.array(*imgs))
+                            if images is None
+                            else images.when(is_action, F.array(*imgs))
+                        )
+                cdc_rows = (
+                    dec.filter(F.col("_action") != "carry")
+                    .select(F.explode(images).alias("_c"))
+                    .select("_c.*")
+                    # the sidecar stores PHYSICAL names so the feeds'
+                    # one end-projection is uniform
+                    .select(
+                        *[F.col(c).alias(cmap.get(c, c)) for c in tcols],
+                        F.col("_change_type"),
+                    )
+                )
+                cdc_stage = f"cdc-{uuid.uuid4().hex}"
+                cdc_rows.write.mode("overwrite").parquet(
+                    os.path.join(table_dir, cdc_stage)
+                )
+
+            # ---- manifest ----
+            new_parts = dict(cur["partitions"])
+            for v in rewrite_vals:
+                new_parts.pop(f"{prefix}{v}", None)
+            for e in written:
+                v = e.split("=", 1)[1]
+                if v in extend_vals and e in cur["partitions"]:
+                    new_parts[e] = _entry_dirs(cur["partitions"][e]) + [stage]
+                else:
+                    new_parts[e] = stage
+            new_stats, new_bloom = _carry_stats_blooms(
+                cur, written, new_parts, extend_vals, stage_path, stats_cols
+            )
+            manifest = _next_manifest(
+                cur, op, pcol,
+                # a delete-only merge stages no data files: anchor the
+                # manifest on the DV stage instead (tombstone_keys' shape)
+                stage if write_vals else dv_stage,
+                new_parts, new_stats, new_bloom, batch_id,
+                schemas={
+                    (stage if write_vals else ""): (
+                        _file_schema_json(stage_rows.schema, drop=pcol)
+                        if written
+                        else None
+                    ),
+                    (dv_stage or ""): (
+                        _file_schema_json(dvf.schema) if dv_stage else None
+                    ),
+                    (cdc_stage or ""): (
+                        _file_schema_json(cdc_rows.schema)
+                        if cdc_stage
+                        else None
+                    ),
+                },
+                dv=new_dv or None,
+                dv_key=dv_key if new_dv else None,
+                cdc=cdc_stage,
+            )
+            anchor = stage_path if write_vals else os.path.join(
+                table_dir, dv_stage
+            )
+            if _publish(table_dir, manifest, anchor):
+                return {
+                    "version": manifest["version"], "updated": n_upd,
+                    "deleted": n_del, "inserted": n_ins, "carried": n_carry,
+                }
+            # CAS lost: the output depends on the base, so no rebase —
+            # drop everything and re-run against the winner
+            for d in (stage, dv_stage, cdc_stage):
+                if d:
+                    shutil.rmtree(
+                        os.path.join(table_dir, d), ignore_errors=True
+                    )
+        finally:
+            dec.unpersist()
+    raise RuntimeError(
+        f"commit conflict persisted for {max_retries} retries on {table_dir}"
+    )
 
 
 def merge_into_table(
@@ -4465,9 +4946,9 @@ def merge_into_table(
     change_data: bool = True,
 ) -> dict:
     """Conditional multi-clause MERGE INTO on a partition-mapped table —
-    Delta's full MERGE surface as ONE commit on the CAS log (VERDICT
-    r09 #1; the reference's INSERT OR IGNORE upsert, nshmdb.py:263-266,
-    generalized to every clause a CDC-consuming warehouse needs):
+    Delta's full MERGE surface as ONE commit on the CAS log (the
+    reference's INSERT OR IGNORE upsert, nshmdb.py:263-266, generalized
+    to every clause a CDC-consuming warehouse needs):
 
     * ``WHEN MATCHED [AND cond] THEN UPDATE SET {col: expr}`` —
       evaluated FIRST for matched rows (Delta's clause order; an
@@ -4490,36 +4971,22 @@ def merge_into_table(
     Execution is the repo's ONE-SHUFFLE union+window shape, not the
     2-shuffle join MERGE: both sides shuffle once on the merge keys,
     each key-group sees the other side via a window max/count, and
-    every clause evaluates in that single pass. The decision frame is
-    materialized once (_materialize_decision: eager localCheckpoint),
-    then three cheap consumers (a per-partition action rollup — bounded
-    by the partition domain — the stage write, and the tombstone keys)
-    read the stored blocks without recomputing the window.
+    every clause evaluates in that single pass. The decision frame then
+    commits through `_dml_commit`, the core UPDATE and DELETE share: it
+    owns the partition economics (carried partitions untouched, inserts
+    and arrivals into unscanned partitions appended as generations,
+    in-place updates and departures rewritten) and, because a merge has
+    keys, tombstones a partition whose ONLY change is whole-key
+    deletes (O(deleted keys), composite keys included) instead of
+    rewriting it.
 
-    Scale shape (the Delta MERGE cost model at partition granularity):
-
-    * partitions whose manifest stats DISPROVE every source key are
-      never scanned (no ``BY SOURCE`` clause ⇒ touched-partition
-      pruning via the source keys' min/max — one tiny job); when the
-      source's distinct key set is small and the table carries Bloom
-      bitmaps on the keys, each partition is additionally probed PER
-      KEY, so scattered CDC keys spanning the whole range still prune
-      (VERDICT r10 stretch #7);
-    * scanned partitions whose rows all carry are NOT rewritten —
-      their mapping, stats, and blooms carry forward untouched;
-    * a partition whose ONLY change is whole-key deletes is tombstoned
-      (O(deleted keys), the deletion-vector trade) instead of
-      rewritten — composite merge keys included (the dv file carries
-      key tuples, VERDICT r10 #2);
-    * inserts append a generation to their entry (O(new rows)), never
-      rewrite it — whether the partition was scanned or not (VERDICT
-      r10 #3: a single new key landing in a large otherwise-unchanged
-      partition stages only the new rows, Delta's pure-insert append);
-      partition-moving updates landing in UNSCANNED partitions extend
-      the same way;
-    * only partitions with in-place updates / arrivals into scanned
-      partitions / departures are rewritten. ``BY SOURCE`` clauses
-      force a full scan — disclosed, same as Delta.
+    Scan shape: partitions whose manifest stats DISPROVE every source
+    key are never scanned (no ``BY SOURCE`` clause ⇒ touched-partition
+    pruning via the source keys' min/max — one tiny job); when the
+    source's distinct key set is small and the table carries Bloom
+    bitmaps on the keys, each partition is additionally probed PER
+    KEY, so scattered CDC keys spanning the whole range still prune.
+    ``BY SOURCE`` clauses force a full scan — disclosed, same as Delta.
 
     Tombstone/DV integration: the base is read THROUGH the current
     tombstones (a hidden key is NOT MATCHED, so the insert clause can
@@ -4557,7 +5024,7 @@ def merge_into_table(
     as before-images, inserts as after-images, carried rows absent —
     which `read_table_changes_typed` and the ``changeTypes`` streaming
     source read directly (O(changed rows), no diff-base
-    reconstruction; VERDICT r10 #1). ``change_data=False`` skips the
+    reconstruction). ``change_data=False`` skips the
     sidecar write and consumers fall back to map-diff pair images.
 
     ``evolve_schema=True`` is Delta's MERGE schema auto-merge: columns
@@ -4569,8 +5036,8 @@ def merge_into_table(
     not part of the output (the SET/INSERT expressions can still READ
     them via ``s.<col>``).
 
-    On a column-mapped table (RENAME/DROP COLUMN history, r13 —
-    VERDICT r12 #1) everything the caller writes is the LOGICAL
+    On a column-mapped table (RENAME/DROP COLUMN history) everything
+    the caller writes is the LOGICAL
     schema — merge keys, clause conditions and SET/INSERT expressions
     (``s.col``/``t.col``), ``stats_cols``, the source's columns — and
     the decision frame runs on the logical view exactly like
@@ -4585,7 +5052,7 @@ def merge_into_table(
     if isinstance(when_not_matched_insert, dict) and not when_not_matched_insert:
         # {} is truthy-adjacent enough to read as "insert with defaults"
         # but would stage all-NULL rows that only fail much later via
-        # the opaque NULL-partition-column raise_error (ADVICE r10)
+        # the opaque NULL-partition-column raise_error
         raise ValueError(
             "when_not_matched_insert={} inserts all-NULL rows; pass True "
             "(insert source columns by name) or a non-empty {col: expr} map"
@@ -4622,7 +5089,7 @@ def merge_into_table(
             if isinstance(lst, tuple) and lst and isinstance(lst[0], str):
                 # the easy API mistake: a bare clause tuple instead of
                 # a list of tuples — iterating it would produce the
-                # misleading "unknown clause kind 'u'" (r10 sweep)
+                # misleading "unknown clause kind 'u'"
                 lst = [lst]
             out = []
             for cl in lst:
@@ -4693,50 +5160,21 @@ def merge_into_table(
     if not (has_matched or has_insert or by_source):
         raise ValueError("merge_into_table needs at least one clause")
 
-    for _ in range(max_retries):
-        cur = current_commit(table_dir)
-        if cur["version"] == 0:
-            raise ValueError(
-                f"{table_dir} has no commits; a merge into an empty table "
-                "is an append — use append_partition_transaction"
-            )
-        if "partitions" not in cur:
-            raise ValueError(
-                f"{table_dir} is a single-dir committed table; use "
-                "merge_into + committed_transaction"
-            )
-        if cur.get("legacy_layouts"):
-            raise ValueError(
-                f"{table_dir} has unmigrated legacy partition layouts; a "
-                "merge computed against the current layout would miss "
-                "their rows — run migrate_legacy_layouts first"
-            )
-        # column mapping (r13 — the VERDICT r12 #1 lift): like
-        # UPDATE/DELETE, the whole decision frame runs in LOGICAL
-        # names — keys, clause expressions (``s.col``/``t.col``), the
-        # insert map, stats_cols, the source's columns — and translates
-        # to the stable PHYSICAL names exactly three times: stats/bloom
-        # pruning lookups, the staged files, and the on-disk sidecars
-        # (CDC images + dv key files). The reference's J13 upsert
-        # (nshmdb.py:263-266) is the degenerate MERGE and must survive
-        # a rename without a rewrite.
-        cmap = _column_map(cur)
-        pkeys = [cmap.get(k, k) for k in keys]
+    def scan(cur: dict) -> dict:
+        """The entries the merge reads: all of them with a BY SOURCE
+        clause, else those whose stats (source key bounds) and blooms
+        (per source key) may hold a source key."""
+        pkeys = _physical_names(keys, cur)
         if cur.get("dv") and _dv_keys(cur) != pkeys:
             raise ValueError(
                 f"{table_dir} tombstones key {cur.get('dv_key')!r}; a merge "
                 f"on {keys!r} (physical {pkeys!r}) cannot maintain the "
                 "deletion vectors — materialize_tombstones first"
             )
-        if batch_id is not None and batch_id in committed_batch_ids(table_dir):
-            return {"version": cur["version"], "updated": 0, "deleted": 0,
-                    "inserted": 0, "carried": 0, "replayed": True}
-        pcol = cur["partition_col"]
-        prefix = f"{pcol}="
-
-        # ---- touched-partition pruning (no BY SOURCE clause only) ----
         scan_parts = cur["partitions"]
-        if not by_source and cur.get("stats"):
+        if by_source:
+            return scan_parts
+        if cur.get("stats"):
             b = source.agg(
                 *[F.min(k).alias(f"_lo{i}") for i, k in enumerate(keys)],
                 *[F.max(k).alias(f"_hi{i}") for i, k in enumerate(keys)],
@@ -4747,146 +5185,95 @@ def merge_into_table(
                 if b[f"_lo{i}"] is not None
             }
             scan_parts = _stats_prune(cur, prune)
-        if (
-            not by_source
-            and scan_parts
-            and cur.get("bloom")
-            and any(
-                c in specs
-                for specs in cur["bloom"].values()
-                for c in pkeys
-            )
+        blooms = cur.get("bloom")
+        if not (
+            scan_parts
+            and blooms
+            and any(c in specs for specs in blooms.values() for c in pkeys)
         ):
-            # bloom-probe refinement (VERDICT r10 stretch #7): one
-            # global min/max range degrades to nothing when the source
-            # keys are SCATTERED (the CDC-batch case — a handful of
-            # keys spanning the table's whole range). When the source's
-            # distinct key set is small (<= _MERGE_BLOOM_PROBE_CAP, one
-            # limit-bounded job), probe each partition's Bloom bitmaps
-            # per key instead: a partition survives only if SOME source
-            # key may be present in it. Conservative like all skipping —
-            # a missing bitmap or NULL key component keeps the entry.
-            ks = (
-                source.select(*keys)
-                .distinct()
-                .limit(_MERGE_BLOOM_PROBE_CAP + 1)
-                .collect()
+            return scan_parts
+        # bloom-probe refinement: one global min/max range degrades to
+        # nothing when the source keys are SCATTERED (the CDC-batch case
+        # — a handful of keys spanning the table's whole range). When
+        # the source's distinct key set is small (<=
+        # _MERGE_BLOOM_PROBE_CAP, one limit-bounded job), probe each
+        # partition's Bloom bitmaps per key instead: a partition
+        # survives only if SOME source key may be present in it.
+        # Conservative like all skipping — a missing bitmap or NULL key
+        # component keeps the entry.
+        ks = (
+            source.select(*keys)
+            .distinct()
+            .limit(_MERGE_BLOOM_PROBE_CAP + 1)
+            .collect()
+        )
+        if len(ks) > _MERGE_BLOOM_PROBE_CAP:
+            return scan_parts
+        # ONE probe-position job per (column, spec) across all keys, and
+        # one bitmap decode per (entry, column) — not per (key, entry)
+        for c, pc in zip(keys, pkeys):
+            for spec in {
+                (sp["m"], sp["k"], sp["t"])
+                for e in scan_parts
+                for sp in [blooms.get(e, {}).get(pc)]
+                if sp is not None and "t" in sp
+            }:
+                _bloom_probes_prefetch(spark, [row[c] for row in ks], *spec)
+        bits_of: dict = {}
+
+        def _may(entry: str, pc: str, v) -> bool:
+            sp = blooms.get(entry, {}).get(pc)
+            if sp is None or v is None or "t" not in sp:
+                return True
+            if (entry, pc) not in bits_of:
+                bits_of[entry, pc] = base64.b64decode(sp["bits"])
+            return _bloom_may_contain(spark, sp, v, bits=bits_of[entry, pc])
+
+        return {
+            entry: dirname
+            for entry, dirname in scan_parts.items()
+            if any(
+                all(_may(entry, pc, row[c]) for c, pc in zip(keys, pkeys))
+                for row in ks
             )
-            if len(ks) <= _MERGE_BLOOM_PROBE_CAP:
-                blooms = cur["bloom"]
-                # ONE probe-position job per (column, spec) across all
-                # keys, and one bitmap decode per (entry, column) —
-                # not per (key, entry) (r11 review #3)
-                for c, pc in zip(keys, pkeys):
-                    for spec in {
-                        (sp["m"], sp["k"], sp["t"])
-                        for e in scan_parts
-                        for sp in [blooms.get(e, {}).get(pc)]
-                        if sp is not None and "t" in sp
-                    }:
-                        _bloom_probes_prefetch(
-                            spark, [row[c] for row in ks], *spec
-                        )
-                bits_of: dict = {}
+        }
 
-                def _entry_bits(entry: str, c: str, sp: dict):
-                    ck = (entry, c)
-                    if ck not in bits_of:
-                        bits_of[ck] = base64.b64decode(sp["bits"])
-                    return bits_of[ck]
-
-                def _may(entry: str, pc: str, v) -> bool:
-                    sp = blooms.get(entry, {}).get(pc)
-                    if sp is None or v is None or "t" not in sp:
-                        return True
-                    return _bloom_may_contain(
-                        spark, sp, v, bits=_entry_bits(entry, pc, sp)
-                    )
-
-                scan_parts = {
-                    entry: dirname
-                    for entry, dirname in scan_parts.items()
-                    if any(
-                        all(
-                            _may(entry, pc, row[c])
-                            for c, pc in zip(keys, pkeys)
-                        )
-                        for row in ks
-                    )
-                }
-        scanned_vals = {e.split("=", 1)[1] for e in scan_parts}
-
-        # target LOGICAL schema from the full map (plan resolve, zero
-        # jobs) — on a mapped table the merge surface is the logical
-        # view throughout
-        full = _to_logical(_read_partition_map(spark, table_dir, cur), cur)
-        tcols = list(full.columns)
-        ttypes = dict(zip(full.schema.names, [f.dataType for f in full.schema]))
-        base_cols = set(tcols)
+    def build(cur: dict, base, tcols: list, ttypes: dict) -> DataFrame:
+        """The one-shuffle union+window decision frame."""
+        pcol = cur["partition_col"]
+        base_cols = list(tcols)
+        tcols, ttypes = list(tcols), dict(ttypes)
         if evolve_schema:
             # Delta's schema auto-merge: source-only columns join the
             # target schema. Only the rewritten/extended files carry
             # them; older generations read them as NULL through the
             # mergeSchema read path — parquet's own evolution contract.
-            src_types = dict(
-                zip(source.schema.names, [f.dataType for f in source.schema])
-            )
-            for c in source.columns:
-                if c not in base_cols:
-                    # joining a mapped table's schema: the new column
-                    # maps to itself, so its name must not collide with
-                    # retained dropped data or another column's stable
-                    # physical name (rename_column's own rules)
-                    if c in _dropped_physical(cur):
-                        raise ValueError(
-                            f"evolved column {c!r} was dropped from this "
-                            "table (metadata-only); its physical data "
-                            "still exists — pick a different name"
-                        )
-                    if c in set(cmap.values()):
-                        raise ValueError(
-                            f"evolved column {c!r} is another column's "
-                            "physical name; pick a name not in the "
-                            "physical schema"
-                        )
-                    tcols.append(c)
-                    ttypes[c] = src_types[c]
+            for f in source.schema:
+                if f.name in base_cols:
+                    continue
+                # joining a mapped table's schema: the new column maps
+                # to itself, so its name must not collide with retained
+                # dropped data or another column's stable physical name
+                # (rename_column's own rules)
+                if f.name in _dropped_physical(cur):
+                    raise ValueError(
+                        f"evolved column {f.name!r} was dropped from this "
+                        "table (metadata-only); its physical data still "
+                        "exists — pick a different name"
+                    )
+                if f.name in set(_column_map(cur).values()):
+                    raise ValueError(
+                        f"evolved column {f.name!r} is another column's "
+                        "physical name; pick a name not in the physical "
+                        "schema"
+                    )
+                tcols.append(f.name)
+                ttypes[f.name] = f.dataType
         for k in keys:
             if k not in tcols:
                 raise ValueError(f"merge key {k!r} not a target column")
             if k not in source.columns:
                 raise ValueError(f"merge key {k!r} not a source column")
-
-        base = None
-        if scan_parts:
-            base = _apply_tombstones(
-                spark, table_dir, cur,
-                _read_partition_map(
-                    spark, table_dir,
-                    {
-                        "partition_col": pcol,
-                        "partitions": scan_parts,
-                        "dir_schemas": cur.get("dir_schemas") or {},
-                    },
-                ),
-            )
-            if base is not None and (cmap or _dropped_physical(cur)):
-                # mapped table: lift the physical base read to the
-                # LOGICAL view once, padding columns the pruned scan
-                # lacks as typed NULLs — the tombstone anti-join above
-                # ran first (dv key files carry physical names)
-                bhave = set(base.columns)
-                base = base.select(
-                    *[
-                        (
-                            F.col(cmap.get(c, c))
-                            if cmap.get(c, c) in bhave
-                            else F.lit(None).cast(ttypes[c])
-                        ).alias(c)
-                        for c in tcols
-                        if c in base_cols
-                    ]
-                )
 
         # ---- the one-shuffle decision pass ----
         s2 = source.select(
@@ -4894,20 +5281,8 @@ def merge_into_table(
             F.struct(*[F.col(c) for c in source.columns]).alias("s"),
         )
         if base is not None:
-            # the pruned base may lack columns only UNSCANNED
-            # generations carry (schema evolution + stats pruning) —
-            # pad them as typed NULLs so the full-table struct resolves
-            # (r10 review #1)
-            have = set(base.columns)
             t2 = base.select(
-                *keys, F.lit("t").alias("_side"),
-                F.struct(
-                    *[
-                        F.col(c) if c in have
-                        else F.lit(None).cast(ttypes[c]).alias(c)
-                        for c in sorted(base_cols, key=tcols.index)
-                    ]
-                ).alias("t"),
+                *keys, F.lit("t").alias("_side"), F.struct(*base_cols).alias("t")
             )
             u = t2.unionByName(s2, allowMissingColumns=True)
         else:
@@ -4915,11 +5290,7 @@ def merge_into_table(
                 "t",
                 F.lit(None).cast(
                     T.StructType(
-                        [
-                            T.StructField(c, ttypes[c])
-                            for c in tcols
-                            if c in base_cols
-                        ]
+                        [T.StructField(c, ttypes[c]) for c in base_cols]
                     )
                 ),
             )
@@ -4958,20 +5329,16 @@ def merge_into_table(
             ).cast("string"),
         )
         update_labels: list[str] = []
-        for i, (kind, cond, _mp) in enumerate(m_clauses):
-            label = "delete" if kind == "delete" else f"u{i}"
-            if kind == "update":
-                update_labels.append(label)
-            t_branch = t_branch.when(
-                matched & _merge_cond(cond, True), F.lit(label)
-            )
-        for i, (kind, cond, _mp) in enumerate(b_clauses):
-            label = "delete" if kind == "delete" else f"b{i}"
-            if kind == "update":
-                update_labels.append(label)
-            t_branch = t_branch.when(
-                unmatched_t & _merge_cond(cond, True), F.lit(label)
-            )
+        for tag, applies, clauses in (
+            ("u", matched, m_clauses), ("b", unmatched_t, b_clauses)
+        ):
+            for i, (kind, cond, _mp) in enumerate(clauses):
+                label = "delete" if kind == "delete" else f"{tag}{i}"
+                if kind == "update":
+                    update_labels.append(label)
+                t_branch = t_branch.when(
+                    applies & _merge_cond(cond, True), F.lit(label)
+                )
         act = F.when(
             F.col("_side") == "t", t_branch.otherwise(F.lit("carry"))
         ).otherwise(
@@ -4989,6 +5356,7 @@ def merge_into_table(
             if isinstance(when_not_matched_insert, dict)
             else {c: f"s.{c}" for c in tcols if c in source.columns}
         )
+
         def t_val(c: str):
             # carry value: an evolved (source-only) column has no t
             # field — older rows carry NULL, parquet evolution's rule
@@ -4998,10 +5366,6 @@ def merge_into_table(
                 else F.lit(None).cast(ttypes[c])
             )
 
-        def clause_val(mapping: dict | None, c: str):
-            m_ = mapping or {}
-            return F.expr(m_[c]) if c in m_ else t_val(c)
-
         out_cols = []
         for c in tcols:
             col = F.when(
@@ -5010,21 +5374,18 @@ def merge_into_table(
                 if c in ins_map
                 else F.lit(None).cast(ttypes[c]),
             )
-            for i, (kind, _cond, mapping) in enumerate(m_clauses):
-                if kind == "update":
-                    col = col.when(
-                        F.col("_act") == f"u{i}", clause_val(mapping, c)
-                    )
-            for i, (kind, _cond, mapping) in enumerate(b_clauses):
-                if kind == "update":
-                    col = col.when(
-                        F.col("_act") == f"b{i}", clause_val(mapping, c)
-                    )
+            for tag, clauses in (("u", m_clauses), ("b", b_clauses)):
+                for i, (kind, _cond, mapping) in enumerate(clauses):
+                    if kind == "update":
+                        col = col.when(
+                            F.col("_act") == f"{tag}{i}",
+                            F.expr(mapping[c]) if c in mapping else t_val(c),
+                        )
             col = col.otherwise(t_val(c)).cast(ttypes[c])
             if c == pcol:
-                # updates can also null the partition column (r10
-                # review #5): without the guard the NULL leaks into the
-                # rollup and fails later with an opaque sorted() error
+                # updates can also null the partition column: without
+                # the guard the NULL leaks into the rollup and fails
+                # later with an opaque sorted() error
                 col = F.when(
                     (F.col("_act") != "carry")
                     & (F.col("_act") != "delete")
@@ -5037,440 +5398,71 @@ def merge_into_table(
                     ).cast("string"),
                 ).otherwise(col).cast("string")
             out_cols.append(col.alias(c))
-        dec = dec.select(
+        is_update = (
+            F.col("_act").isin(*update_labels) if update_labels else F.lit(False)
+        )
+        return dec.select(
             *out_cols,
-            (
-                F.when(
-                    F.col("_act").isin(*update_labels), F.lit("update")
-                ).otherwise(F.col("_act"))
-                if update_labels
-                else F.col("_act")
-            ).alias("_action"),
+            F.when(is_update, F.lit("update"))
+            .otherwise(F.col("_act"))
+            .alias("_action"),
             F.expr(f"t.{pcol}").cast("string").alias("_t_part"),
             # pre-image carrier for the CDC sidecar: update rows keep
             # their full BEFORE struct (NULL for everything else, so
             # the materialized frame stays change-sized on that column)
-            (
-                F.when(F.col("_act").isin(*update_labels), F.col("t"))
-                if update_labels
-                else F.lit(None).cast(
-                    T.StructType(
-                        [
-                            T.StructField(c, ttypes[c])
-                            for c in tcols
-                            if c in base_cols
-                        ]
-                    )
-                )
-            ).alias("_pre"),
+            F.when(is_update, F.col("t")).alias("_pre"),
         )
 
-        stage = f"data-{uuid.uuid4().hex}"
-        stage_path = os.path.join(table_dir, stage)
-        dv_stage = None
-        cdc_stage = None
-        try:
-            dec = _materialize_decision(dec)
+    return _dml_commit(
+        spark, table_dir, "merge", scan, build, keys=keys,
+        stats_cols=stats_cols, batch_id=batch_id, max_retries=max_retries,
+        change_data=change_data,
+    )
 
-            # per-partition action rollup — bounded by the partition
-            # domain (the repo's sanctioned bounded-collect shape)
-            null_key = F.lit(False)
-            for k in keys:
-                null_key = null_key | F.col(k).isNull()
-            rollup = (
-                dec.groupBy(
-                    "_action", "_t_part", F.col(pcol).alias("_p"),
-                    null_key.alias("_kn"),
-                )
-                .count()
-                .collect()
-            )
-            upd_in, ins_in, del_in, moved_out = set(), set(), set(), set()
-            null_del = set()  # partitions with NULL-key delete rows
-            n_upd = n_del = n_ins = n_carry = 0
-            for r in rollup:
-                if r._action == "carry":
-                    n_carry += r["count"]
-                elif r._action == "update":
-                    n_upd += r["count"]
-                    upd_in.add(r._p)
-                    if r._p != r._t_part:
-                        moved_out.add(r._t_part)
-                elif r._action == "delete":
-                    n_del += r["count"]
-                    del_in.add(r._t_part)
-                    if r._kn:
-                        # a NULL merge key cannot be expressed as a key
-                        # tombstone: the read-side anti-join on NULL
-                        # matches nothing, so the "deleted" row would
-                        # silently survive (and poison the dv key files
-                        # for the typed stream reader) — force the
-                        # partition to rewrite instead (ADVICE r10)
-                        null_del.add(r._t_part)
-                else:
-                    n_ins += r["count"]
-                    ins_in.add(r._p)
-            # Inserts do NOT force a rewrite by themselves (VERDICT r10
-            # #3 — Delta appends new files for pure inserts): a scanned
-            # partition whose only change is arrivals of NEW keys takes
-            # a generation append below (extend_vals), O(new rows)
-            # instead of O(partition). Only in-place updates, moves,
-            # and (non-tombstonable) deletes rewrite.
-            rewrite_vals = {v for v in upd_in if v in scanned_vals} | moved_out
-            if cur.get("dv") and n_ins:
-                # re-inserting a tombstoned key clears it from the DV
-                # (consolidation below) — which would RESURRECT the
-                # key's stale physical rows in their old partitions.
-                # Those partitions must be rewritten (purged) in this
-                # same commit: their staged content is the tombstone-
-                # filtered base read, so the stale rows drop out. They
-                # are necessarily in the scan set (a re-inserted key is
-                # a source key, and pruning kept every partition whose
-                # stats can hold one); one extra bounds job, only on
-                # the dv-and-inserts path. (Found by the CDC-apply
-                # replica≠head pin, r10.)
-                reins = (
-                    dec.filter(F.col("_action") == "insert")
-                    .select(*keys)
-                    .join(
-                        _read_parquet_fast(
-                            spark,
-                            *[
-                                os.path.join(table_dir, d)
-                                for d in cur["dv"]
-                            ],
-                            schema_json=_dirs_schema(cur, cur["dv"]),
+
+def _where_decision(
+    base: DataFrame, pcol: str, where: str | None, action: str,
+    set_exprs: dict[str, str] | None = None,
+) -> DataFrame:
+    """UPDATE's and DELETE's decision frame (`_dml_commit`'s contract):
+    a map-only projection of the scanned base, no shuffle. A row whose
+    ``where`` holds is an ``action`` row, anything else (a NULL
+    predicate included — Delta's rule) carries; ``set_exprs`` are SQL
+    over the OLD row, applied to ``update`` rows only."""
+    hit = F.coalesce(
+        F.expr(where) if where is not None else F.lit(True), F.lit(False)
+    )
+    dec = base.withColumn(
+        "_action", F.when(hit, F.lit(action)).otherwise(F.lit("carry"))
+    )
+    hit = F.col("_action") == action
+    set_exprs = set_exprs or {}
+    types = {f.name: f.dataType for f in base.schema}
+    out_cols = []
+    for c in base.columns:
+        col = F.col(c)
+        if c in set_exprs:
+            col = F.when(hit, F.expr(set_exprs[c])).otherwise(col).cast(types[c])
+        if c == pcol:
+            if set_exprs:  # an UPDATE may null the partition column
+                col = F.when(
+                    hit & col.isNull(),
+                    F.raise_error(
+                        F.lit(
+                            f"UPDATE: updated row has NULL partition "
+                            f"column {pcol!r}"
                         )
-                        # dv files carry PHYSICAL key names; the
-                        # decision frame is logical
-                        .select(
-                            *[
-                                F.col(pk).alias(k)
-                                for k, pk in zip(keys, pkeys)
-                            ]
-                        )
-                        .distinct(),
-                        on=keys,
-                        how="left_semi",
-                    )
-                )
-                rb = reins.agg(
-                    *[F.min(k).alias(f"_lo{i}") for i, k in enumerate(keys)],
-                    *[F.max(k).alias(f"_hi{i}") for i, k in enumerate(keys)],
-                ).collect()[0]
-                if rb["_lo0"] is not None:
-                    stale = _stats_prune(
-                        {
-                            "partitions": dict(scan_parts),
-                            "stats": cur.get("stats", {}),
-                        },
-                        {
-                            pkeys[i]: (rb[f"_lo{i}"], rb[f"_hi{i}"])
-                            for i in range(len(keys))
-                        },
-                    )
-                    rewrite_vals |= {
-                        e.split("=", 1)[1] for e in stale
-                    }
-            rewrite_vals |= null_del & del_in
-            cand = del_in - rewrite_vals
-            if cand:
-                # the DV path is sound only for WHOLE-KEY deletes: a key
-                # with duplicate target rows and a row-divergent delete
-                # condition (one row deletes here, another carries or
-                # updates elsewhere) must NOT be tombstoned — the
-                # key-wide tombstone would hide the surviving row
-                # everywhere (ADVICE r10 high). One bounded aggregation
-                # over the decision frame (guarded: only merges with
-                # tombstone-candidate partitions pay it); the output is
-                # the mixed keys' delete partitions — partition-domain
-                # bounded, the sanctioned collect shape.
-                keyed_rows = F.lit(True)
-                for k in keys:
-                    keyed_rows = keyed_rows & F.col(k).isNotNull()
-                mixed = (
-                    dec.filter((F.col("_action") != "insert") & keyed_rows)
-                    .groupBy(*keys)
-                    .agg(
-                        F.collect_set(
-                            F.when(
-                                F.col("_action") == "delete",
-                                F.col("_t_part"),
-                            )
-                        ).alias("_dp"),
-                        F.max(
-                            (F.col("_action") != "delete").cast("int")
-                        ).alias("_live"),
-                    )
-                    .filter((F.size("_dp") > 0) & (F.col("_live") == 1))
-                    .select(F.explode("_dp").alias("_p"))
-                    .distinct()
-                    .collect()
-                )
-                rewrite_vals |= {r._p for r in mixed} & cand
-            # extend = generation append: unscanned arrival partitions
-            # (whole partition absent from the base read) AND scanned
-            # insert-only partitions (their carried rows stay in the old
-            # generations; only the _act == "insert" rows are staged)
-            extend_vals = (upd_in | ins_in) - scanned_vals - rewrite_vals
-            extend_vals |= (ins_in & scanned_vals) - rewrite_vals
-            tomb_vals = del_in - rewrite_vals  # delete-only: DV, not rewrite
-
-            write_vals = sorted(rewrite_vals | extend_vals)
-            written: set[str] = set()
-            if write_vals:
-                # per-partition staging mode: rewrites stage every
-                # surviving row; extended entries stage ONLY the rows
-                # this merge created there (inserts, moved-in updates) —
-                # their carried rows live on in the prior generations.
-                # The value sets are driver-known literals, so they fold
-                # into the plan as isin predicates — the old tiny
-                # createDataFrame + broadcast join cost a
-                # defaultParallelism-task collect job per merge for rows
-                # the driver already held (guide §1; same class as the
-                # r14 VALUES bloom-probe rewrite).
-                _rw = (
-                    F.col(pcol).isin(sorted(rewrite_vals))
-                    if rewrite_vals
-                    else F.lit(False)
-                )
-                stage_rows = (
-                    dec.filter(F.col("_action") != "delete")
-                    .filter(F.col(pcol).isin(write_vals))
-                    .filter(
-                        _rw
-                        | F.col("_action").isin("insert", "update")
-                    )
-                    .drop("_action", "_t_part", "_pre")
-                    # back to the stable PHYSICAL names for the staged
-                    # files (evolved source-only columns map to
-                    # themselves)
-                    .select(
-                        *[F.col(c).alias(cmap.get(c, c)) for c in tcols]
-                    )
-                )
-                _distribute_for_partitioned_write(
-                    stage_rows, pcol, nvals=len(write_vals)
-                ).write.mode("overwrite").partitionBy(pcol).parquet(
-                    stage_path
-                )
-                written = {
-                    n for n in os.listdir(stage_path) if n.startswith(prefix)
-                }
-                _check_entry_values(written)
-                if cur.get("constraints") and written:
-                    _enforce_constraints(
-                        _read_partition_map(
-                            spark, table_dir,
-                            {
-                                "partition_col": pcol,
-                                "partitions": {
-                                    e: stage for e in sorted(written)
-                                },
-                                "dir_schemas": {
-                                    stage: _file_schema_json(
-                                        stage_rows.schema, drop=pcol
-                                    )
-                                },
-                            },
-                        ),
-                        cur["constraints"],
-                        stage_path,
-                        manifest=cur,
-                    )
-
-            # ---- deletion-vector bookkeeping ----
-            new_dv = cur.get("dv", [])
-            dv_key = cur.get("dv_key")
-            if tomb_vals or (new_dv and n_ins):
-                # dv files carry the PHYSICAL key names (the whole
-                # read/typed-feed side addresses them that way); the
-                # consolidation joins run in logical names and the
-                # final write aliases back
-                dv_key = _dv_key_field(pkeys)
-                tomb_df = None
-                if tomb_vals:
-                    # driver-known literal set: isin folds into the
-                    # plan (the semi join against a tiny createDataFrame
-                    # paid a defaultParallelism-task collect per merge)
-                    tomb_df = (
-                        dec.filter(F.col("_action") == "delete")
-                        .filter(F.col("_t_part").isin(sorted(tomb_vals)))
-                        .select(*keys)
-                    )
-                if new_dv and n_ins:
-                    # consolidate: re-inserted keys must leave the DV or
-                    # the old tombstone hides the new row
-                    old_keys = (
-                        _read_parquet_fast(
-                            spark,
-                            *[os.path.join(table_dir, d) for d in new_dv],
-                        )
-                        .select(
-                            *[
-                                F.col(pk).alias(k)
-                                for k, pk in zip(keys, pkeys)
-                            ]
-                        )
-                        .distinct()
-                    )
-                    ins_keys = (
-                        dec.filter(F.col("_action") == "insert")
-                        .select(*keys)
-                        .distinct()
-                    )
-                    kept = old_keys.join(ins_keys, on=keys, how="left_anti")
-                    tomb_df = (
-                        kept
-                        if tomb_df is None
-                        else kept.unionByName(tomb_df)
-                    )
-                    new_dv = []
-                dv_stage = f"data-{uuid.uuid4().hex}"
-                dvf = tomb_df.distinct().select(
-                    *[F.col(k).alias(pk) for k, pk in zip(keys, pkeys)]
-                )
-                dvf.write.mode("overwrite").parquet(
-                    os.path.join(table_dir, dv_stage)
-                )
-                new_dv = new_dv + [dv_stage]
-
-            # ---- manifest ----
-            new_parts = dict(cur["partitions"])
-            for v in rewrite_vals:
-                new_parts.pop(f"{prefix}{v}", None)
-            for e in written:
-                v = e.split("=", 1)[1]
-                if v in extend_vals and e in cur["partitions"]:
-                    new_parts[e] = _entry_dirs(cur["partitions"][e]) + [stage]
-                else:
-                    new_parts[e] = stage
-            new_stats, new_bloom = _carry_stats_blooms(
-                cur, written, new_parts, extend_vals, stage_path, stats_cols
-            )
-            if not write_vals and not dv_stage:
-                # nothing changed (every row carried): Delta skips
-                # empty commits; so do we
-                if n_upd or n_del or n_ins:
-                    raise AssertionError("actions counted but nothing staged")
-                return {
-                    "version": cur["version"], "updated": 0, "deleted": 0,
-                    "inserted": 0, "carried": n_carry,
-                }
-
-            # ---- CDC sidecar (Delta's _change_data files) ----
-            # The decision frame knows every row-level action, so the
-            # merge records its EXACT images at commit time: update rows
-            # as update_preimage/update_postimage PAIRS (keyed by
-            # construction — same dec row), deletes as their before
-            # image, inserts as their after image, carried rows absent
-            # (Delta's dataChange discipline). The typed change feed
-            # (batch and stream) then reads this O(changed rows) dir
-            # instead of reconstructing pair images from map diffs —
-            # VERDICT r10 #1 / ADVICE r09 #5 second half. One
-            # change-sized write per merge; `change_data=False` skips it
-            # and consumers fall back to the pair reconstruction.
-            if change_data and (n_upd or n_del or n_ins):
-                pre_fields, cur_fields, _img = _cdc_image_parts(
-                    tcols, ttypes, base_cols
-                )
-                cdc_rows = (
-                    dec.filter(F.col("_action") != "carry")
-                    .select(
-                        F.explode(
-                            F.when(
-                                F.col("_action") == "update",
-                                F.array(
-                                    _img(pre_fields, "update_preimage"),
-                                    _img(cur_fields, "update_postimage"),
-                                ),
-                            )
-                            .when(
-                                F.col("_action") == "delete",
-                                F.array(_img(cur_fields, "delete")),
-                            )
-                            .otherwise(
-                                F.array(_img(cur_fields, "insert"))
-                            )
-                        ).alias("_c")
-                    )
-                    .select("_c.*")
-                    # the sidecar stores PHYSICAL names (update_table's
-                    # contract) so the feeds' one end-projection is
-                    # uniform across the DML triad
-                    .select(
-                        *[F.col(c).alias(cmap.get(c, c)) for c in tcols],
-                        F.col("_change_type"),
-                    )
-                )
-                cdc_stage = f"cdc-{uuid.uuid4().hex}"
-                cdc_rows.write.mode("overwrite").parquet(
-                    os.path.join(table_dir, cdc_stage)
-                )
-            manifest = {
-                "version": cur["version"] + 1,
-                # a delete-only merge stages no data files: anchor the
-                # manifest on the DV stage instead (tombstone_keys' shape)
-                "dir": stage if write_vals else dv_stage,
-                "partition_col": pcol,
-                "partitions": new_parts,
-                "batch_ids": [batch_id] if batch_id is not None else [],
-                "op": "merge",
-            }
-            if new_stats:
-                manifest["stats"] = new_stats
-            if new_bloom:
-                manifest["bloom"] = new_bloom
-            if cur.get("constraints"):
-                manifest["constraints"] = cur["constraints"]
-            _carry_column_map(manifest, cur)
-            if new_dv:
-                manifest["dv"] = new_dv
-                manifest["dv_key"] = dv_key
-            if cdc_stage:
-                manifest["cdc"] = cdc_stage
-            _note_dir_schemas(
-                manifest,
-                cur,
-                {
-                    (stage if write_vals else ""): (
-                        _file_schema_json(stage_rows.schema, drop=pcol)
-                        if write_vals and written
-                        else None
-                    ),
-                    (dv_stage or ""): (
-                        _file_schema_json(dvf.schema) if dv_stage else None
-                    ),
-                    (cdc_stage or ""): (
-                        _file_schema_json(cdc_rows.schema)
-                        if cdc_stage
-                        else None
-                    ),
-                },
-            )
-            anchor = stage_path if write_vals else os.path.join(
-                table_dir, dv_stage
-            )
-            if _publish(table_dir, manifest, anchor):
-                return {
-                    "version": manifest["version"], "updated": n_upd,
-                    "deleted": n_del, "inserted": n_ins, "carried": n_carry,
-                }
-            # CAS lost: the merge's output depends on the base, so no
-            # rebase — drop everything and re-run against the winner
-            shutil.rmtree(stage_path, ignore_errors=True)
-            if dv_stage:
-                shutil.rmtree(
-                    os.path.join(table_dir, dv_stage), ignore_errors=True
-                )
-            if cdc_stage:
-                shutil.rmtree(
-                    os.path.join(table_dir, cdc_stage), ignore_errors=True
-                )
-        finally:
-            dec.unpersist()
-    raise RuntimeError(
-        f"commit conflict persisted for {max_retries} retries on {table_dir}"
+                    ).cast("string"),
+                ).otherwise(col)
+            col = col.cast("string")
+        out_cols.append(col.alias(c))
+    return dec.select(
+        *out_cols,
+        F.col("_action"),
+        F.col(pcol).cast("string").alias("_t_part"),
+        F.when(F.col("_action") == "update", F.struct(*base.columns)).alias(
+            "_pre"
+        ),
     )
 
 
@@ -5494,11 +5486,11 @@ def update_table(
     ``set_exprs`` maps columns to SQL expressions evaluated over the
     OLD row (``{"v": "v * 2", "flag": "'hot'"}``).
 
-    Partition economics mirror the merge's: only partitions holding a
-    matched row (or receiving a moved one) rewrite; a partition-moving
-    update rewrites the departure side and EXTENDS unscanned arrival
-    partitions with just the moved rows; everything else carries
-    byte-identical. ``prune`` is the advisory manifest-stats hint
+    The decision is a map-only projection (`_where_decision`) and the
+    commit is MERGE's (`_dml_commit`), so the partition economics are
+    the core's: only partitions holding a matched row rewrite, and a
+    partition-moving update EXTENDS unscanned arrival partitions with
+    just the moved rows. ``prune`` is the advisory manifest-stats hint
     (``{col: (lo, hi)}`` etc. — same spec as `read_keyed_table`):
     entries it skips are never scanned, so it must PROVE no row there
     matches ``where`` (the caller's contract, exactly like a pruned
@@ -5521,298 +5513,34 @@ def update_table(
     names. Returns ``{"version", "updated", "carried"}``."""
     if not set_exprs:
         raise ValueError("update_table needs a non-empty SET map")
-    for _ in range(max_retries):
-        cur = current_commit(table_dir)
-        if cur["version"] == 0 or "partitions" not in cur:
-            raise ValueError(
-                f"{table_dir} is not a partition-mapped committed table"
-            )
-        if cur.get("legacy_layouts"):
-            raise ValueError(
-                f"{table_dir} has unmigrated legacy partition layouts; an "
-                "update computed against the current layout would miss "
-                "their rows — run migrate_legacy_layouts first"
-            )
-        if batch_id is not None and batch_id in committed_batch_ids(table_dir):
-            return {"version": cur["version"], "updated": 0, "carried": 0,
-                    "replayed": True}
+
+    def scan(cur: dict) -> dict:
         if cur.get("dv") and set(_dv_keys(cur)) & set(set_exprs):
             # assigning a tombstoned key column can write a value the
-            # carried-forward deletion vector HIDES — silent row loss
-            # (r11 review) — and merge's consolidation machinery is the
-            # right tool for key-changing writes
+            # carried-forward deletion vector HIDES — silent row loss —
+            # and merge's consolidation machinery is the right tool for
+            # key-changing writes
             raise ValueError(
                 f"{table_dir} tombstones key {cur.get('dv_key')!r}; an "
                 "UPDATE assigning that column could write rows the "
                 "deletion vector hides — materialize_tombstones first, "
                 "or use merge_into_table (which consolidates the DV)"
             )
-        pcol = cur["partition_col"]
-        prefix = f"{pcol}="
-        # column mapping (r12): the whole decision frame runs in
-        # LOGICAL names — ``where``/``set_exprs``/``prune``/
-        # ``stats_cols`` are what the user sees — and translates back
-        # to the stable PHYSICAL names exactly twice: at the survivor
-        # stage and at the CDC sidecar (both on-disk artifacts). A
-        # rewritten partition physically sheds DROPPED columns' data
-        # (state-identical: the current version never projects them,
-        # old versions keep their old dirs).
-        cmap = _column_map(cur)
-        # full prune spec support, same as read_keyed_table: range/null
-        # bounds through stats, ("eq", v) probes through stats' (v, v)
-        # degenerate range AND the Bloom bitmaps (r11 review — passing
-        # the raw eq tuple into _stats_prune mis-compared it as bounds)
-        base_prune, eq = _split_prune(_physical_names(prune, cur))
-        scan_parts = dict(_stats_prune(cur, base_prune))
-        if eq and scan_parts:
-            scan_parts = dict(_bloom_prune(spark, cur, scan_parts, eq))
-        scanned_vals = {e.split("=", 1)[1] for e in scan_parts}
-        if not scan_parts:
-            # every partition disproven: O(manifest) no-op — the full
-            # mergeSchema resolve below reads every live footer, which
-            # a pruned-empty update must not pay (r12 review sweep 2
-            # #6; SET-column name validation is skipped on this path)
-            return {"version": cur["version"], "updated": 0, "carried": 0}
+        return _pruned_entries(spark, cur, _physical_names(prune, cur))
 
-        # full-table LOGICAL schema (plan resolve, zero jobs) so a
-        # pruned base missing evolved columns still projects them as
-        # typed NULLs
-        full = _to_logical(_read_partition_map(spark, table_dir, cur), cur)
-        tcols = list(full.columns)
-        ttypes = dict(zip(full.schema.names, [f.dataType for f in full.schema]))
+    def build(cur: dict, base, tcols: list, ttypes: dict) -> DataFrame:
         for c in set_exprs:
             if c not in tcols:
                 raise ValueError(f"SET column {c!r} not a table column")
-
-        base = (
-            _apply_tombstones(
-                spark, table_dir, cur,
-                _read_partition_map(
-                    spark, table_dir,
-                    {
-                        "partition_col": pcol,
-                        "partitions": scan_parts,
-                        "dir_schemas": cur.get("dir_schemas") or {},
-                    },
-                ),
-            )
-            if scan_parts
-            else None
-        )
-        if base is None:
-            return {"version": cur["version"], "updated": 0, "carried": 0}
-        have = set(base.columns)  # PHYSICAL names on disk
-        dec = base.select(
-            *[
-                (
-                    F.col(cmap.get(c, c))
-                    if cmap.get(c, c) in have
-                    else F.lit(None).cast(ttypes[c])
-                ).alias(c)
-                for c in tcols
-            ]
-        )
-        lhave = {c for c in tcols if cmap.get(c, c) in have}
-        # NULL predicate = not matched (Delta's UPDATE rule)
-        upd = F.coalesce(
-            F.expr(where) if where is not None else F.lit(True), F.lit(False)
-        )
-        dec = dec.withColumn("_upd", upd)
-        out_cols = []
-        for c in tcols:
-            col = (
-                F.when(F.col("_upd"), F.expr(set_exprs[c])).otherwise(
-                    F.col(c)
-                )
-                if c in set_exprs
-                else F.col(c)
-            ).cast(ttypes[c])
-            if c == pcol:
-                col = F.when(
-                    F.col("_upd") & col.isNull(),
-                    F.raise_error(
-                        F.lit(
-                            f"UPDATE: updated row has NULL partition "
-                            f"column {pcol!r}"
-                        )
-                    ).cast("string"),
-                ).otherwise(col).cast("string")
-            out_cols.append(col.alias(c))
-        dec = dec.select(
-            *out_cols,
-            F.col("_upd"),
-            F.col(pcol).cast("string").alias("_t_part"),
-            # pre-image carrier for the CDC sidecar (updated rows only)
-            F.when(
-                F.col("_upd"),
-                F.struct(*[F.col(c) for c in tcols if c in lhave]),
-            ).alias("_pre"),
+        return _where_decision(
+            base, cur["partition_col"], where, "update", set_exprs
         )
 
-        stage = f"data-{uuid.uuid4().hex}"
-        stage_path = os.path.join(table_dir, stage)
-        cdc_stage = None
-        try:
-            dec = _materialize_decision(dec)
-
-            rollup = (
-                dec.groupBy("_upd", "_t_part", F.col(pcol).alias("_p"))
-                .count()
-                .collect()
-            )
-            n_upd = n_carry = 0
-            upd_old, upd_new = set(), set()
-            for r in rollup:
-                if r._upd:
-                    n_upd += r["count"]
-                    upd_old.add(r._t_part)
-                    upd_new.add(r._p)
-                else:
-                    n_carry += r["count"]
-            if not n_upd:
-                return {
-                    "version": cur["version"], "updated": 0,
-                    "carried": n_carry,
-                }
-            # departures and scanned arrivals rewrite; arrivals into
-            # UNSCANNED partitions extend with just the moved rows
-            rewrite_vals = upd_old | (upd_new & scanned_vals)
-            extend_vals = upd_new - scanned_vals
-            write_vals = sorted(rewrite_vals | extend_vals)
-            # driver-known literal sets fold into the plan as isin
-            # predicates (no tiny-createDataFrame broadcast job)
-            _rw = (
-                F.col(pcol).isin(sorted(rewrite_vals))
-                if rewrite_vals
-                else F.lit(False)
-            )
-            stage_rows = (
-                dec.filter(F.col(pcol).isin(write_vals))
-                .filter(_rw | F.col("_upd"))
-                .drop("_upd", "_t_part", "_pre")
-                # back to the stable PHYSICAL names for the staged files
-                .select(*[F.col(c).alias(cmap.get(c, c)) for c in tcols])
-            )
-            _distribute_for_partitioned_write(
-                stage_rows, pcol, nvals=len(write_vals)
-            ).write.mode("overwrite").partitionBy(pcol).parquet(
-                stage_path
-            )
-            written = {
-                n for n in os.listdir(stage_path) if n.startswith(prefix)
-            }
-            _check_entry_values(written)
-            if cur.get("constraints") and written:
-                _enforce_constraints(
-                    _read_partition_map(
-                        spark, table_dir,
-                        {
-                            "partition_col": pcol,
-                            "partitions": {e: stage for e in sorted(written)},
-                            "dir_schemas": {
-                                stage: _file_schema_json(
-                                    stage_rows.schema, drop=pcol
-                                )
-                            },
-                        },
-                    ),
-                    cur["constraints"],
-                    stage_path,
-                    manifest=cur,
-                )
-
-            if change_data:
-                # same sidecar contract as MERGE: exact pre/post pairs,
-                # carried rows absent; the sidecar stores PHYSICAL
-                # names so the feeds' one end-projection is uniform
-                pre_fields, cur_fields, _img = _cdc_image_parts(
-                    tcols, ttypes, lhave
-                )
-                cdc_rows = (
-                    dec.filter(F.col("_upd"))
-                    .select(
-                        F.explode(
-                            F.array(
-                                _img(pre_fields, "update_preimage"),
-                                _img(cur_fields, "update_postimage"),
-                            )
-                        ).alias("_c")
-                    )
-                    .select("_c.*")
-                    .select(
-                        *[F.col(c).alias(cmap.get(c, c)) for c in tcols],
-                        F.col("_change_type"),
-                    )
-                )
-                cdc_stage = f"cdc-{uuid.uuid4().hex}"
-                cdc_rows.write.mode("overwrite").parquet(
-                    os.path.join(table_dir, cdc_stage)
-                )
-
-            new_parts = dict(cur["partitions"])
-            for v in rewrite_vals:
-                new_parts.pop(f"{prefix}{v}", None)
-            for e in written:
-                v = e.split("=", 1)[1]
-                if v in extend_vals and e in cur["partitions"]:
-                    new_parts[e] = _entry_dirs(cur["partitions"][e]) + [stage]
-                else:
-                    new_parts[e] = stage
-            new_stats, new_bloom = _carry_stats_blooms(
-                cur, written, new_parts, extend_vals, stage_path, stats_cols
-            )
-            manifest = {
-                "version": cur["version"] + 1,
-                "dir": stage,
-                "partition_col": pcol,
-                "partitions": new_parts,
-                "batch_ids": [batch_id] if batch_id is not None else [],
-                "op": "update",
-            }
-            if new_stats:
-                manifest["stats"] = new_stats
-            if new_bloom:
-                manifest["bloom"] = new_bloom
-            if cur.get("constraints"):
-                manifest["constraints"] = cur["constraints"]
-            _carry_column_map(manifest, cur)
-            if cur.get("dv"):
-                manifest["dv"] = cur["dv"]
-                manifest["dv_key"] = cur["dv_key"]
-            if cdc_stage:
-                manifest["cdc"] = cdc_stage
-            _note_dir_schemas(
-                manifest,
-                cur,
-                {
-                    stage: (
-                        _file_schema_json(stage_rows.schema, drop=pcol)
-                        if written
-                        else None
-                    ),
-                    (cdc_stage or ""): (
-                        _file_schema_json(cdc_rows.schema)
-                        if cdc_stage
-                        else None
-                    ),
-                },
-            )
-            if _publish(table_dir, manifest, stage_path):
-                return {
-                    "version": manifest["version"], "updated": n_upd,
-                    "carried": n_carry,
-                }
-            # CAS lost: re-run against the winner
-            shutil.rmtree(stage_path, ignore_errors=True)
-            if cdc_stage:
-                shutil.rmtree(
-                    os.path.join(table_dir, cdc_stage), ignore_errors=True
-                )
-        finally:
-            dec.unpersist()
-    raise RuntimeError(
-        f"commit conflict persisted for {max_retries} retries on {table_dir}"
+    r = _dml_commit(
+        spark, table_dir, "update", scan, build, stats_cols=stats_cols,
+        batch_id=batch_id, max_retries=max_retries, change_data=change_data,
     )
+    return {k: v for k, v in r.items() if k not in ("deleted", "inserted")}
 
 
 def delete_table(
@@ -5836,11 +5564,11 @@ def delete_table(
     erasure demo (`apply_erasure_rewrite`, reference consumer
     nshmdb/nshmdb.py:263-266): any predicate, any table, one commit.
 
-    Partition economics mirror `update_table`'s: after ONE decision
-    scan, only partitions holding ≥1 matched row rewrite (their
-    survivors restage); a partition whose rows ALL matched simply
-    leaves the manifest (no empty file is written — its old files
-    remain readable history); every other partition's mapping carries
+    The decision is a map-only projection (`_where_decision`) and the
+    commit is MERGE's (`_dml_commit`): with no key to tombstone, every
+    partition holding a matched row rewrites its survivors, a
+    partition whose rows ALL matched leaves the manifest (its old
+    files remain readable history), and every other partition carries
     forward byte-identical. Two narrowing hints bound the decision
     scan itself: ``prune`` (the manifest-stats spec of
     `read_keyed_table` — ranges/null through stats, ``("eq", v)``
@@ -5880,212 +5608,23 @@ def delete_table(
             "delete_table needs an explicit WHERE (use 'true' to delete "
             "every row on purpose)"
         )
-    for _ in range(max_retries):
-        cur = current_commit(table_dir)
-        if cur["version"] == 0 or "partitions" not in cur:
-            raise ValueError(
-                f"{table_dir} is not a partition-mapped committed table"
-            )
-        if cur.get("legacy_layouts"):
-            raise ValueError(
-                f"{table_dir} has unmigrated legacy partition layouts; a "
-                "delete computed against the current layout would miss "
-                "their rows — run migrate_legacy_layouts first"
-            )
-        if batch_id is not None and batch_id in committed_batch_ids(table_dir):
-            return {"version": cur["version"], "deleted": 0, "carried": 0,
-                    "replayed": True}
-        pcol = cur["partition_col"]
-        prefix = f"{pcol}="
-        # column mapping (r12): decision frame in LOGICAL names,
-        # translated back to the stable PHYSICAL names at the survivor
-        # stage and the CDC sidecar (same contract as update_table); a
-        # rewritten partition physically sheds dropped columns' data
-        # (state-identical)
-        cmap = _column_map(cur)
-        base_prune, eq = _split_prune(_physical_names(prune, cur))
-        scan_parts = dict(_stats_prune(cur, base_prune))
-        if eq and scan_parts:
-            scan_parts = dict(_bloom_prune(spark, cur, scan_parts, eq))
-        if partition_values is not None:
-            allowed = set(partition_values)
-            scan_parts = {
-                e: d
-                for e, d in scan_parts.items()
-                if e.split("=", 1)[1] in allowed
-            }
-        if not scan_parts:
-            # every partition disproven/out of scope: O(manifest) no-op
-            # without the full-footer mergeSchema resolve below (r12
-            # review sweep 2 #6)
-            return {"version": cur["version"], "deleted": 0, "carried": 0}
 
-        # full-table LOGICAL schema (plan resolve, zero jobs) so a
-        # pruned base missing evolved columns still projects them as
-        # typed NULLs
-        full = _to_logical(_read_partition_map(spark, table_dir, cur), cur)
-        tcols = list(full.columns)
-        ttypes = dict(zip(full.schema.names, [f.dataType for f in full.schema]))
+    def scan(cur: dict) -> dict:
+        parts = _pruned_entries(spark, cur, _physical_names(prune, cur))
+        if partition_values is None:
+            return parts
+        allowed = set(partition_values)
+        return {e: d for e, d in parts.items() if e.split("=", 1)[1] in allowed}
 
-        base = (
-            _apply_tombstones(
-                spark, table_dir, cur,
-                _read_partition_map(
-                    spark, table_dir,
-                    {
-                        "partition_col": pcol,
-                        "partitions": scan_parts,
-                        "dir_schemas": cur.get("dir_schemas") or {},
-                    },
-                ),
-            )
-            if scan_parts
-            else None
-        )
-        if base is None:
-            return {"version": cur["version"], "deleted": 0, "carried": 0}
-        have = set(base.columns)  # PHYSICAL names on disk
-        dec = base.select(
-            *[
-                (
-                    F.col(cmap.get(c, c))
-                    if cmap.get(c, c) in have
-                    else F.lit(None).cast(ttypes[c])
-                ).cast(ttypes[c]).alias(c)
-                for c in tcols
-            ]
-        )
-        # NULL predicate = not matched (Delta's DELETE rule)
-        dec = dec.withColumn(
-            "_del", F.coalesce(F.expr(where), F.lit(False))
-        )
-
-        stage = f"data-{uuid.uuid4().hex}"
-        stage_path = os.path.join(table_dir, stage)
-        cdc_stage = None
-        try:
-            # materialize the decision once: the rollup, the survivor
-            # stage, and the CDC sidecar would otherwise each re-run
-            # the scan (separate actions share no ReusedExchange)
-            dec = _materialize_decision(dec)
-
-            rollup = (
-                dec.groupBy("_del", F.col(pcol).cast("string").alias("_p"))
-                .count()
-                .collect()
-            )
-            n_del = n_carry = 0
-            del_vals = set()
-            for r in rollup:
-                if r._del:
-                    n_del += r["count"]
-                    del_vals.add(r._p)
-                else:
-                    n_carry += r["count"]
-            if not n_del:
-                return {
-                    "version": cur["version"], "deleted": 0,
-                    "carried": n_carry,
-                }
-            # ONLY partitions holding a matched row rewrite (survivors
-            # restage); a fully-deleted partition writes nothing and
-            # its entry drops from the map below
-            # driver-known literal set folds into the plan as an isin
-            # predicate (no tiny-createDataFrame broadcast job)
-            stage_rows = (
-                dec.filter(~F.col("_del"))
-                .withColumn(pcol, F.col(pcol).cast("string"))
-                .filter(F.col(pcol).isin(sorted(del_vals)))
-                .drop("_del")
-                # back to the stable PHYSICAL names for the staged files
-                .select(*[F.col(c).alias(cmap.get(c, c)) for c in tcols])
-            )
-            _distribute_for_partitioned_write(
-                stage_rows, pcol, nvals=len(del_vals)
-            ).write.mode("overwrite").partitionBy(pcol).parquet(
-                stage_path
-            )
-            written = {
-                n for n in os.listdir(stage_path) if n.startswith(prefix)
-            }
-            _check_entry_values(written)
-
-            if change_data:
-                # Delta's _change_data for DELETE: one full-row image
-                # per deleted row, tagged 'delete'; carried rows absent
-                # sidecar stores PHYSICAL names (feeds end-project once)
-                cdc_rows = dec.filter(F.col("_del")).select(
-                    *[
-                        F.col(c).cast(ttypes[c]).alias(cmap.get(c, c))
-                        for c in tcols
-                    ],
-                    F.lit("delete").alias("_change_type"),
-                )
-                cdc_stage = f"cdc-{uuid.uuid4().hex}"
-                cdc_rows.write.mode("overwrite").parquet(
-                    os.path.join(table_dir, cdc_stage)
-                )
-
-            new_parts = dict(cur["partitions"])
-            for v in del_vals:
-                new_parts.pop(f"{prefix}{v}", None)
-            for e in written:
-                new_parts[e] = stage
-            new_stats, new_bloom = _carry_stats_blooms(
-                cur, written, new_parts, set(), stage_path, stats_cols
-            )
-            manifest = {
-                "version": cur["version"] + 1,
-                "dir": stage,
-                "partition_col": pcol,
-                "partitions": new_parts,
-                "batch_ids": [batch_id] if batch_id is not None else [],
-                "op": "delete",
-            }
-            if new_stats:
-                manifest["stats"] = new_stats
-            if new_bloom:
-                manifest["bloom"] = new_bloom
-            if cur.get("constraints"):
-                manifest["constraints"] = cur["constraints"]
-            _carry_column_map(manifest, cur)
-            if cur.get("dv"):
-                manifest["dv"] = cur["dv"]
-                manifest["dv_key"] = cur["dv_key"]
-            if cdc_stage:
-                manifest["cdc"] = cdc_stage
-            _note_dir_schemas(
-                manifest,
-                cur,
-                {
-                    stage: (
-                        _file_schema_json(stage_rows.schema, drop=pcol)
-                        if written
-                        else None
-                    ),
-                    (cdc_stage or ""): (
-                        _file_schema_json(cdc_rows.schema)
-                        if cdc_stage
-                        else None
-                    ),
-                },
-            )
-            if _publish(table_dir, manifest, stage_path):
-                return {
-                    "version": manifest["version"], "deleted": n_del,
-                    "carried": n_carry,
-                }
-            # CAS lost: re-run against the winner
-            shutil.rmtree(stage_path, ignore_errors=True)
-            if cdc_stage:
-                shutil.rmtree(
-                    os.path.join(table_dir, cdc_stage), ignore_errors=True
-                )
-        finally:
-            dec.unpersist()
-    raise RuntimeError(
-        f"commit conflict persisted for {max_retries} retries on {table_dir}"
+    r = _dml_commit(
+        spark, table_dir, "delete", scan,
+        lambda cur, base, tcols, ttypes: _where_decision(
+            base, cur["partition_col"], where, "delete"
+        ),
+        stats_cols=stats_cols, batch_id=batch_id, max_retries=max_retries,
+        change_data=change_data,
     )
+    return {k: v for k, v in r.items() if k not in ("updated", "inserted")}
 
 
 def upsert_stream_to_table(

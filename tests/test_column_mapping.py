@@ -819,9 +819,10 @@ class TestMappedMerge:
 
 class TestMappingModel:
     """Model-based property test: a random valid sequence of
-    rename / drop / append / UPDATE / DELETE / compact / materialize
-    against a pandas twin — the logical view must equal the model after
-    every sequence, whatever interleaving hypothesis finds."""
+    rename / drop / append / UPDATE / DELETE / MERGE / compact /
+    materialize against a pandas twin — the logical view must equal the
+    model after every sequence, and the typed change feed must fold the
+    starting model into it, whatever interleaving hypothesis finds."""
 
     @staticmethod
     def _ops():
@@ -831,7 +832,7 @@ class TestMappingModel:
             st.tuples(
                 st.sampled_from(
                     ["rename", "drop", "append", "update", "delete",
-                     "compact", "materialize", "tombstone"]
+                     "merge", "compact", "materialize", "tombstone"]
                 ),
                 st.integers(0, 9),
             ),
@@ -840,8 +841,10 @@ class TestMappingModel:
         )
 
     def test_logical_state_matches_pandas_model(self, spark):
+        import json
         import shutil
         import tempfile
+        from collections import Counter
 
         import pandas as pd
         from hypothesis import given, settings
@@ -877,6 +880,21 @@ class TestMappingModel:
                 )
                 fresh = list(pool)
                 next_k = [100]
+                # the feed is checked from feed_v: the model there, with
+                # later renames/drops applied (the feed serves the END
+                # version's logical schema)
+                feed_v, feed_base = 1, model.copy()
+
+                def schema_of(cols):
+                    return ", ".join(
+                        f"{c} " + (
+                            "long" if c == "k"
+                            else "double" if model[c].dtype == float
+                            else "string"
+                        )
+                        for c in cols
+                    )
+
                 for op, n in ops:
                     data_cols = [c for c in model.columns if c != "day"]
                     if op == "rename" and fresh:
@@ -886,6 +904,7 @@ class TestMappingModel:
                         new = fresh.pop(0)
                         rename_column(spark, path, old, new)
                         model = model.rename(columns={old: new})
+                        feed_base = feed_base.rename(columns={old: new})
                     elif op == "drop":
                         cands = [c for c in data_cols if c != "k"]
                         if len(data_cols) <= 2 or not cands:
@@ -893,6 +912,7 @@ class TestMappingModel:
                         col = cands[n % len(cands)]
                         drop_column(spark, path, col)
                         model = model.drop(columns=[col])
+                        feed_base = feed_base.drop(columns=[col])
                     elif op == "append":
                         k = next_k[0]
                         next_k[0] += 1
@@ -901,20 +921,12 @@ class TestMappingModel:
                             if c in ("k", "day"):
                                 continue
                             row[c] = float(k) if model[c].dtype == float else f"s{k}"
-                        schema = ", ".join(
-                            f"{c} " + (
-                                "long" if c == "k"
-                                else "double" if model[c].dtype == float
-                                else "string"
-                            )
-                            for c in model.columns
-                        )
                         append_partition_transaction(
                             spark, path,
                             "day",
                             spark.createDataFrame(
                                 pd.DataFrame([row])[list(model.columns)],
-                                schema,
+                                schema_of(model.columns),
                             ),
                         )
                         model = pd.concat(
@@ -937,6 +949,42 @@ class TestMappingModel:
                     elif op == "delete":
                         delete_table(spark, path, where=f"k % 5 = {n % 5}")
                         model = model[model["k"] % 5 != (n % 5)]
+                    elif op == "merge":
+                        # upsert one visible key's data columns, insert
+                        # one new key
+                        if model.empty:
+                            continue
+                        sets = [c for c in data_cols if c != "k"]
+                        old = model.iloc[n % len(model)].to_dict()
+                        hit = {
+                            c: (old[c] + 0.5 if model[c].dtype == float
+                                else f"{old[c]}m") if c in sets else old[c]
+                            for c in model.columns
+                        }
+                        k = next_k[0]
+                        next_k[0] += 1
+                        new = {
+                            c: k if c == "k" else "x" if c == "day"
+                            else float(k) if model[c].dtype == float
+                            else f"s{k}"
+                            for c in model.columns
+                        }
+                        merge_into_table(
+                            spark, path,
+                            spark.createDataFrame(
+                                pd.DataFrame([hit, new])[list(model.columns)],
+                                schema_of(model.columns),
+                            ),
+                            ["k"],
+                            when_matched_update={c: f"s.{c}" for c in sets},
+                            when_not_matched_insert=True,
+                        )
+                        sel = model["k"] == old["k"]
+                        for c in sets:
+                            model.loc[sel, c] = hit[c]
+                        model = pd.concat(
+                            [model, pd.DataFrame([new])], ignore_index=True
+                        )
                     elif op == "tombstone":
                         # MOR delete on the (never-renamed) key column:
                         # hides the keys from every read — including the
@@ -958,7 +1006,10 @@ class TestMappingModel:
                             spark, path, max_files_per_partition=0
                         )
                     elif op == "materialize":
-                        materialize_column_mapping(spark, path)
+                        # a feed cannot span a materialize: restart it
+                        if materialize_column_mapping(spark, path):
+                            feed_v = current_commit(path)["version"]
+                            feed_base = model.copy()
                 got = read_keyed_table(spark, path)
                 assert sorted(got.columns) == sorted(model.columns)
                 g = sorted(
@@ -970,6 +1021,27 @@ class TestMappingModel:
                     for _, row in model.iterrows()
                 )
                 assert g == m
+                # the typed feed folds the model at feed_v into the model
+                cols = sorted(model.columns)
+                sign = {"insert": 1, "update_postimage": 1,
+                        "delete": -1, "update_preimage": -1}
+
+                def key(vals):
+                    return json.dumps([
+                        float(v) if isinstance(v, (int, float)) else v
+                        for v in vals
+                    ])
+
+                net = Counter(
+                    key(row[c] for c in cols) for _, row in feed_base.iterrows()
+                )
+                feed = read_table_changes_typed(spark, path, feed_v)
+                for r in feed.collect() if feed is not None else []:
+                    net[key(r[c] for c in cols)] += sign[r["_change_type"]]
+                assert +net == Counter(
+                    key(row[c] for c in cols) for _, row in model.iterrows()
+                )
+                assert not -net
             finally:
                 shutil.rmtree(d, ignore_errors=True)
 

@@ -4,8 +4,6 @@ its golden expectations (:73-133) and the ETL pipeline round trip."""
 
 from __future__ import annotations
 
-import uuid
-
 import numpy as np
 import pytest
 
@@ -20,6 +18,8 @@ from nshm2022db_spark.etl import (
     stack_fault_systems,
 )
 from nshm2022db_spark import schemas
+
+from conftest import count_jobs
 
 
 def alpine_db(spark, path: str) -> NSHMDB:
@@ -64,18 +64,6 @@ def alpine_db(spark, path: str) -> NSHMDB:
 @pytest.fixture(scope="module")
 def db(spark, tmp_path_factory):
     return alpine_db(spark, str(tmp_path_factory.mktemp("nshmdb")))
-
-
-def count_jobs(spark, fn) -> int:
-    """Spark jobs submitted while ``fn`` runs, counted by job group."""
-    sc = spark.sparkContext
-    group = f"nshm-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group, interruptOnCancel=False)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class TestPointLookups:
