@@ -955,7 +955,15 @@ def connected_components(
     this converges in 2-4 rounds. Each round is one join + one min-agg,
     both on the same key — at 100 TB persist labels per round (here
     localCheckpoint) to cut lineage, and AQE handles the skew of a giant
-    component."""
+    component.
+
+    ``max_iter`` caps the rounds INCLUDING the one that detects
+    convergence: a round stops the loop when its label sum equals the
+    previous round's, and round 1 has no earlier sum to compare. Labels
+    that settle after d rounds therefore stop after round d + 1, and a
+    graph already at its fixed point (no edges) still runs 2 rounds. A
+    ``max_iter`` below that raises RuntimeError, so pass at least the
+    deepest component's diameter + 1."""
     labels = vertices.select(F.col("doc_id"), F.col("doc_id").alias("cluster_id"))
     # undirected: propagate both ways. Materialize ONCE — the edge set may
     # be an expensive candidate pipeline (jaccard join) and every round

@@ -21,6 +21,7 @@ from nshm2022db_spark.streaming.sinks import (
     delete_table,
     drop_column,
     merge_into_table,
+    overwrite_partition_transaction,
     read_keyed_table,
     read_table_changes,
     read_table_changes_typed,
@@ -819,10 +820,11 @@ class TestMappedMerge:
 
 class TestMappingModel:
     """Model-based property test: a random valid sequence of
-    rename / drop / append / UPDATE / DELETE / MERGE / compact /
-    materialize against a pandas twin — the logical view must equal the
-    model after every sequence, and the typed change feed must fold the
-    starting model into it, whatever interleaving hypothesis finds."""
+    rename / drop / append / overwrite / UPDATE / DELETE / MERGE /
+    compact / materialize against a pandas twin — the logical view must
+    equal the model after every sequence, the typed change feed must
+    fold the starting model into it, and stats pruning must never drop
+    a matching row, whatever interleaving hypothesis finds."""
 
     @staticmethod
     def _ops():
@@ -831,8 +833,9 @@ class TestMappingModel:
         return st.lists(
             st.tuples(
                 st.sampled_from(
-                    ["rename", "drop", "append", "update", "delete",
-                     "merge", "compact", "materialize", "tombstone"]
+                    ["rename", "drop", "append", "overwrite", "update",
+                     "delete", "merge", "compact", "materialize",
+                     "tombstone"]
                 ),
                 st.integers(0, 9),
             ),
@@ -847,7 +850,7 @@ class TestMappingModel:
         from collections import Counter
 
         import pandas as pd
-        from hypothesis import given, settings
+        from hypothesis import example, given, settings
 
         from nshm2022db_spark.streaming.sinks import (
             compact_partition_table,
@@ -858,6 +861,12 @@ class TestMappingModel:
 
         @settings(max_examples=5, deadline=None)
         @given(self._ops())
+        # pinned: an unscanned append into an entry whose stats a
+        # scanned append just merged must drop them
+        @example([("overwrite", 3), ("append", 3), ("append", 1)])
+        # pinned: replaceWhere leaves one entry, the DELETE empties the
+        # map; the table must still read in its (renamed) schema
+        @example([("rename", 1), ("overwrite", 1), ("delete", 0)])
         def run(ops):
             d = tempfile.mkdtemp(prefix="cmprop")
             try:
@@ -913,7 +922,7 @@ class TestMappingModel:
                         drop_column(spark, path, col)
                         model = model.drop(columns=[col])
                         feed_base = feed_base.drop(columns=[col])
-                    elif op == "append":
+                    elif op in ("append", "overwrite"):
                         k = next_k[0]
                         next_k[0] += 1
                         row = {"k": k, "day": "x" if n % 2 else "z"}
@@ -921,14 +930,28 @@ class TestMappingModel:
                             if c in ("k", "day"):
                                 continue
                             row[c] = float(k) if model[c].dtype == float else f"s{k}"
-                        append_partition_transaction(
-                            spark, path,
-                            "day",
-                            spark.createDataFrame(
-                                pd.DataFrame([row])[list(model.columns)],
-                                schema_of(model.columns),
-                            ),
+                        batch = spark.createDataFrame(
+                            pd.DataFrame([row])[list(model.columns)],
+                            schema_of(model.columns),
                         )
+                        # alternate draws footer-scan k: the stats merge
+                        # and replace paths, or the drop path
+                        kw = {"stats_cols": ["k"]} if n // 2 % 2 else {}
+                        if op == "append":
+                            append_partition_transaction(
+                                spark, path, "day", batch, **kw
+                            )
+                        else:
+                            # dynamic on even n; replaceWhere on odd n
+                            # also lists y, which gets no batch rows and
+                            # so leaves the map
+                            gone = {row["day"]} | ({"y"} if n % 2 else set())
+                            overwrite_partition_transaction(
+                                spark, path, "day", batch,
+                                replace_where=sorted(gone) if n % 2 else None,
+                                **kw,
+                            )
+                            model = model[~model["day"].isin(gone)]
                         model = pd.concat(
                             [model, pd.DataFrame([row])], ignore_index=True
                         )
@@ -1010,17 +1033,33 @@ class TestMappingModel:
                         if materialize_column_mapping(spark, path):
                             feed_v = current_commit(path)["version"]
                             feed_base = model.copy()
+                def rows_of(df):
+                    return sorted(
+                        tuple(r[c] for c in sorted(model.columns))
+                        for r in df.collect()
+                    )
+
                 got = read_keyed_table(spark, path)
+                assert got is not None
                 assert sorted(got.columns) == sorted(model.columns)
-                g = sorted(
-                    tuple(r[c] for c in sorted(model.columns))
-                    for r in got.collect()
-                )
                 m = sorted(
                     tuple(row[c] for c in sorted(model.columns))
                     for _, row in model.iterrows()
                 )
-                assert g == m
+                assert rows_of(got) == m
+                # stats pruning never drops a matching row, the newest
+                # key's included
+                newest = next_k[0] - 1
+                for lo, hi in ((5, 101), (100, None), (newest, newest)):
+                    top = hi if hi is not None else 1 << 62
+                    hit = read_keyed_table(spark, path, prune={"k": (lo, hi)})
+                    assert rows_of(
+                        hit.filter(F.col("k").between(lo, top))
+                    ) == sorted(
+                        tuple(row[c] for c in sorted(model.columns))
+                        for _, row in model[model["k"].between(lo, top)]
+                        .iterrows()
+                    )
                 # the typed feed folds the model at feed_v into the model
                 cols = sorted(model.columns)
                 sign = {"insert": 1, "update_postimage": 1,

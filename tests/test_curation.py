@@ -469,6 +469,34 @@ class TestTfidfIndexIncremental:
         assert read_keyed_table(spark, f"{t}/m").count() == 4
 
 
+class TestObsBounded:
+    """The stream index's observed-metrics wait polls private PySpark
+    API (``Observation._jo``); a poll that raises must read as a
+    timeout at once, so the batch recomputes instead of failing."""
+
+    class _Raising:
+        @property
+        def _jo(self):
+            raise AttributeError("no _jo on this Observation")
+
+    class _PollRaising:
+        class _Jo:
+            def getRowOrEmpty(self):
+                raise RuntimeError("py4j: method not found")
+
+        _jo = _Jo()
+
+    @pytest.mark.parametrize("obs", [_Raising(), _PollRaising()])
+    def test_failed_poll_returns_none_at_once(self, obs):
+        import time
+
+        from nshm2022db_spark.extensions.curation import _obs_bounded
+
+        t0 = time.monotonic()
+        assert _obs_bounded(obs, timeout_s=60.0) is None
+        assert time.monotonic() - t0 < 1.0
+
+
 class TestBm25:
     def test_stream_index_matches_inline(self, spark, sf_dir):
         """BM25 from the streaming-maintained index == the inline scan

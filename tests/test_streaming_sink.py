@@ -3149,6 +3149,95 @@ class TestOverwritePartition:
                 spark, d, "k", self._batch(spark, 100, 102, "a")
             )
 
+    def test_empty_replace_where_still_checks_the_bloom_spec(
+        self, spark, tmp_path
+    ):
+        import pytest
+
+        from nshm2022db_spark.streaming.sinks import (
+            overwrite_partition_transaction,
+        )
+
+        d = str(tmp_path / "t")
+        with pytest.raises(ValueError, match="bloom_bits"):
+            overwrite_partition_transaction(
+                spark, d, "day", self._batch(spark, 0, 2, "a"),
+                replace_where=[], bloom_cols=["k"], bloom_bits=12,
+            )
+        # a valid spec: replace nothing is a no-op that publishes nothing
+        overwrite_partition_transaction(
+            spark, d, "day", self._batch(spark, 0, 2, "a"),
+            replace_where=[], bloom_cols=["k"],
+        )
+        assert os.path.isdir(d) and not os.listdir(d)
+
+    def test_containment_error_lists_the_callers_values(
+        self, spark, tmp_path
+    ):
+        import pytest
+
+        from nshm2022db_spark.streaming.sinks import (
+            overwrite_partition_transaction,
+        )
+
+        d = str(tmp_path / "t")
+        self._seed(spark, d)
+        with pytest.raises(ValueError, match=r"replace_where \[2, 10\]"):
+            overwrite_partition_transaction(
+                spark, d, "day", self._batch(spark, 0, 2, "a"),
+                replace_where=[10, 2],
+            )
+
+    def test_emptied_map_reads_as_an_empty_table(self, spark, tmp_path):
+        """A replaceWhere listing every live value with an empty batch,
+        and a DELETE of every row, empty the partition map: the table
+        still reads — no rows, its last schema, column renames applied
+        — and takes a MERGE, where it used to read as no table."""
+        from nshm2022db_spark.streaming.sinks import (
+            append_partition_transaction,
+            current_commit,
+            delete_table,
+            merge_into_table,
+            overwrite_partition_transaction,
+            read_keyed_table,
+            rename_column,
+        )
+
+        d = str(tmp_path / "t")
+        self._seed(spark, d)
+        overwrite_partition_transaction(
+            spark, d, "day", self._batch(spark, 0, 0, "a"),
+            replace_where=["a", "b", "c"],
+        )
+        assert current_commit(d)["partitions"] == {}
+        got = read_keyed_table(spark, d)
+        assert got.columns == ["k", "v", "day"] and got.count() == 0
+        # metadata-only commits carry the schema while the map is empty
+        rename_column(spark, d, "v", "w")
+        got = read_keyed_table(spark, d, prune={"k": (0, 5)})
+        assert got.columns == ["k", "w", "day"] and got.count() == 0
+        merge_into_table(
+            spark, d,
+            spark.createDataFrame([(7, 1.0, "a")], "k long, w double, day string"),
+            ["k"],
+            when_not_matched_insert=True,
+        )
+        assert "empty_schema" not in current_commit(d)
+        assert [tuple(r) for r in read_keyed_table(spark, d).collect()] == [
+            (7, 1.0, "a")
+        ]
+        delete_table(spark, d, where="k = 7")
+        assert current_commit(d)["partitions"] == {}
+        got = read_keyed_table(spark, d)
+        assert got.columns == ["k", "w", "day"] and got.count() == 0
+        append_partition_transaction(
+            spark, d, "day",
+            spark.createDataFrame([(8, 2.0, "b")], "k long, w double, day string"),
+        )
+        assert [tuple(r) for r in read_keyed_table(spark, d).collect()] == [
+            (8, 2.0, "b")
+        ]
+
 
 class TestAppendRebaseRace:
     def _batch(self, spark, lo, hi, day):
@@ -5650,6 +5739,37 @@ def _golden_dml_sequence(spark, t: str) -> None:
     sinks.compact_partition_table(spark, t, max_files_per_partition=1, **kw)
     sinks.evolve_partition_column(spark, t, "g")
     sinks.migrate_legacy_layouts(spark, t, **kw)
+
+    def by_g(pairs):
+        return spark.createDataFrame(
+            [(k, float(k), g, "a") for k, g in pairs],
+            "k long, score double, g string, day string",
+        )
+
+    # into stat-carrying, bloom-less 0 (stats merge) and a new 3
+    sinks.append_partition_transaction(
+        spark, t, "g", by_g([(60, "0"), (61, "3")]), bloom_cols=["k"], **kw
+    )
+    # 3 now carries a bloom: its stats merge and its bloom OR-merges
+    sinks.append_partition_transaction(
+        spark, t, "g", by_g([(62, "3"), (63, "0")]), bloom_cols=["k"], **kw
+    )
+    # an unscanned generation: 0 and 3 drop their stats, 3 its bloom
+    sinks.append_partition_transaction(
+        spark, t, "g", by_g([(64, "0"), (65, "3")])
+    )
+    # dynamic overwrite: 1 and 3 hold the stage alone, fresh stats/bloom
+    sinks.overwrite_partition_transaction(
+        spark, t, "g", by_g([(66, "1"), (67, "3")]), bloom_cols=["k"], **kw
+    )
+    # replaceWhere listing 3 with no batch rows: 3 leaves the map
+    sinks.overwrite_partition_transaction(
+        spark, t, "g", by_g([(68, "2")]), replace_where=["2", "3"], **kw
+    )
+    sinks.tombstone_keys(
+        spark, t, "k", spark.createDataFrame([(60,), (61,)], "k long")
+    )
+    sinks.drop_column(spark, t, "day")
 
 
 def _golden_dml_record(t: str) -> dict:
